@@ -217,23 +217,55 @@ def _sync_marker(schema_json: str) -> bytes:
     return hashlib.md5(b"sync:" + schema_json.encode("utf-8")).digest()
 
 
-def ocf_encode(schema: dict | str, records: list[dict[str, Any]]) -> bytes:
-    """records -> one OCF container (the reference writes exactly one
-    record per container; this accepts any count for generality)."""
-    schema_dict = json.loads(schema) if isinstance(schema, str) else schema
-    schema_json = json.dumps(schema_dict)
-    sync = _sync_marker(schema_json)
-
+def _header_bytes(schema_json: str) -> bytes:
+    """Container header for a normalized schema JSON: magic, a one-block
+    metadata map (writer schema + null codec), then the sync marker —
+    so the header's last 16 bytes are the marker every block ends with."""
     out = io.BytesIO()
     out.write(MAGIC)
-    # metadata map: one block of 2 entries, then end-of-map
     write_long(out, 2)
     write_bytes(out, b"avro.schema")
     write_bytes(out, schema_json.encode("utf-8"))
     write_bytes(out, b"avro.codec")
     write_bytes(out, b"null")
     write_long(out, 0)
-    out.write(sync)
+    out.write(_sync_marker(schema_json))
+    return out.getvalue()
+
+
+def _read_header(buf: io.BytesIO) -> tuple[dict, bytes, int]:
+    """Parse a container header from ``buf``'s start; returns the writer
+    schema, the sync marker and the offset of the first data block
+    (``buf`` is left there)."""
+    if buf.read(4) != MAGIC:
+        raise ValueError("not an Avro object container file (bad magic)")
+    meta: dict[str, bytes] = {}
+    while True:
+        count = read_long(buf)
+        if count == 0:
+            break
+        if count < 0:  # spec: negative count prefixes a byte size
+            read_long(buf)
+            count = -count
+        for _ in range(count):
+            k = read_bytes(buf).decode("utf-8")
+            meta[k] = read_bytes(buf)
+    if meta.get("avro.codec", b"null") not in (b"null", b""):
+        raise ValueError(f"unsupported codec {meta.get('avro.codec')!r}")
+    schema = json.loads(meta["avro.schema"].decode("utf-8"))
+    sync = buf.read(16)
+    return schema, sync, buf.tell()
+
+
+def ocf_encode(schema: dict | str, records: list[dict[str, Any]]) -> bytes:
+    """records -> one OCF container (the reference writes exactly one
+    record per container; this accepts any count for generality)."""
+    schema_dict = json.loads(schema) if isinstance(schema, str) else schema
+    header = _header_bytes(json.dumps(schema_dict))
+    sync = header[-16:]
+
+    out = io.BytesIO()
+    out.write(header)
 
     body = io.BytesIO()
     for rec in records:
@@ -258,23 +290,7 @@ def ocf_decode(
     coordinating with producers, which is the entire point of OCF
     carrying the writer schema per message."""
     buf = io.BytesIO(data)
-    if buf.read(4) != MAGIC:
-        raise ValueError("not an Avro object container file (bad magic)")
-    meta: dict[str, bytes] = {}
-    while True:
-        count = read_long(buf)
-        if count == 0:
-            break
-        if count < 0:  # spec: negative count prefixes a byte size
-            read_long(buf)
-            count = -count
-        for _ in range(count):
-            k = read_bytes(buf).decode("utf-8")
-            meta[k] = read_bytes(buf)
-    if meta.get("avro.codec", b"null") not in (b"null", b""):
-        raise ValueError(f"unsupported codec {meta.get('avro.codec')!r}")
-    schema = json.loads(meta["avro.schema"].decode("utf-8"))
-    sync = buf.read(16)
+    schema, sync, _ = _read_header(buf)
     if isinstance(reader_schema, str):
         reader_schema = json.loads(reader_schema)
 
@@ -316,18 +332,9 @@ def _encode_ctx(schema_json: str):
     are assembled once per batch instead of once per row — the per-row
     work reduces to the datum bytes plus three concatenations."""
     schema_dict = json.loads(schema_json)
-    schema_json_norm = json.dumps(schema_dict)
-    sync = _sync_marker(schema_json_norm)
-    head = io.BytesIO()
-    head.write(MAGIC)
-    write_long(head, 2)
-    write_bytes(head, b"avro.schema")
-    write_bytes(head, schema_json_norm.encode("utf-8"))
-    write_bytes(head, b"avro.codec")
-    write_bytes(head, b"null")
-    write_long(head, 0)
-    head.write(sync)
-    prefix = head.getvalue() + _varint_bytes(1)  # header + record count 1
+    header = _header_bytes(json.dumps(schema_dict))
+    sync = header[-16:]
+    prefix = header + _varint_bytes(1)  # header + record count 1
     writers = [
         (f["name"], _PRIMITIVE_WRITERS[f["type"]]) for f in schema_dict["fields"]
     ]
@@ -408,24 +415,7 @@ def ocf_decode_udf(schema_json: str, spark_type: str):
                         rec = ocf_decode(b)
                 else:
                     buf = io.BytesIO(b)
-                    if buf.read(4) != MAGIC:
-                        raise ValueError("bad magic")
-                    meta: dict[str, bytes] = {}
-                    while True:
-                        count = read_long(buf)
-                        if count == 0:
-                            break
-                        if count < 0:
-                            read_long(buf)
-                            count = -count
-                        for _ in range(count):
-                            k = read_bytes(buf).decode("utf-8")
-                            meta[k] = read_bytes(buf)
-                    if meta.get("avro.codec", b"null") not in (b"null", b""):
-                        raise ValueError("unsupported codec")
-                    schema = json.loads(meta["avro.schema"].decode("utf-8"))
-                    sync = buf.read(16)
-                    header_end = buf.tell()
+                    schema, sync, header_end = _read_header(buf)
                     readers = [
                         (f["name"], _PRIMITIVE_READERS[f["type"]])
                         for f in schema["fields"]

@@ -20,8 +20,9 @@ query has materialized. The kernel persist (operators/ranking.py) is
 load-bearing for correctness — it pins the range-sampler's partition
 assignment across the offsets job and the window job; unpersisting
 before the final action would reintroduce the silent prefix-corruption
-hazard documented there. bench.py calls it after each query's count();
-the oracle harness after each comparison.
+hazard documented there. tests/run_driver_check.py calls it after each
+query's toPandas(); perfbench's catalog_mix calls ``release_all()``
+after each full pass over its queries.
 
 Registry keys include ``id(spark.sparkContext)`` so a fresh session
 never sees another session's (dead) JVM-backed entries. Ephemeral

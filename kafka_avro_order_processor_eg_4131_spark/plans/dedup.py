@@ -1360,11 +1360,11 @@ def corpus_dedup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Round-12 note: a concurrent three-chain warm fronted by this entry
     (build MinHash/SimHash/embedding families on threads) was tried and
-    REVERTED — 5-rep A/B (tests/ab_heavies.py base vs no_warm) measured
-    identical subset totals (~32.4 s median both ways; the chains are
-    CPU-bound, so overlap buys nothing) while tripling this entry's
-    noise cross-section (11.1 s vs 5.8 s median). See
-    OPTIMIZATION_r12.md."""
+    REVERTED — a 5-rep A/B (base vs no_warm) measured identical subset
+    totals (~32.4 s median both ways; the chains are CPU-bound, so
+    overlap buys nothing) while tripling this entry's noise
+    cross-section (11.1 s vs 5.8 s median). See docs/PLANS.md
+    "Round-12"."""
     d = doc_fp_cached(spark, sf_dir)
     # every component member IS a near-dup: connected_components only
     # emits nodes that appear in a >=0.8-Jaccard edge, so no cluster-

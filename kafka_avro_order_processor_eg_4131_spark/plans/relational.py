@@ -2225,7 +2225,7 @@ def _li_pairs_capped(spark: SparkSession, sf_dir: str, mod: int = 1) -> DataFram
     k-core/BFS at mod=32), persisted once per (session, mod) via the
     family registry instead of rebuilt per plan.
 
-    Round-10 A/B (tests/ab_heavies.py, quiet-host runs at sf0.1): the
+    Round-10 A/B (heavy-subset reps, quiet-host runs at sf0.1): the
     round-9 basket cap cost ~0.7-0.9s on EACH of the five plans — not
     because the hot-list aggregate is expensive, but because it
     re-derived the plan's unpersisted ``distinct()`` a second time

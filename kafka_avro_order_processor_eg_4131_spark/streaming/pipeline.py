@@ -132,7 +132,15 @@ def dlq_enrich(batch: DataFrame, error_reason_col) -> DataFrame:
 class PipelineSinks:
     """File-based sinks for the broker-free twin. With Kafka available,
     success/dlq/retry would be topics via sources.kafka.write_kafka_batch
-    — same batch DataFrames, different format."""
+    — same batch DataFrames, different format.
+
+    Every sink is append-only and delivery is at-least-once: a
+    micro-batch replayed N times (a failed write, a restart before the
+    checkpoint commit) appends N copies to every sink that wrote in
+    those attempts, healthy ones included, since the four writes run
+    concurrently and a failing one does not stop the others. Readers of
+    ``agg_dir`` must dedupe on ``batch_id`` before summing; the
+    success/DLQ/retry rows carry topic/partition/offset to dedupe on."""
 
     success_dir: str
     dlq_dir: str
@@ -142,7 +150,8 @@ class PipelineSinks:
 
 def process_batch(batch: DataFrame, batch_id: int, sinks: PipelineSinks) -> None:
     """One micro-batch through the 3-way router. The batch is persisted
-    once so the three filtered writes don't recompute the decode UDF.
+    once so the four writes (success, DLQ, retry, agg) don't recompute
+    the decode UDF.
 
     Round 13 (optimization guide §2.6 — overlap independent jobs): the
     four sink writes are independent jobs over the SAME persisted batch,
@@ -258,9 +267,10 @@ def run_order_pipeline(
     ``available_now=True`` processes everything present then stops —
     the batch-bounded mode tests use; with False it runs continuously
     (production shape). ``max_files_per_trigger`` bounds each
-    micro-batch to that many input files — bench.py uses it to force a
-    fixed trigger count so the throughput number includes per-batch
-    commit overhead, like a live Kafka consumer would."""
+    micro-batch to that many input files — perfbench's ``stream_drain``
+    uses it to force a fixed trigger count so the throughput number
+    includes per-batch commit overhead, like a live Kafka consumer
+    would."""
     from ..shipping import ship_package
 
     ship_package(spark)
@@ -318,10 +328,9 @@ def run_order_pipeline(
                     if m is not None:
                         observed_metrics.append(m)
             if progress_out is not None:
-                # raw StreamingQueryProgress dicts — bench.py reads
-                # per-batch durations (batchDuration /
-                # durationMs.triggerExecution) for its end-to-end latency
-                # percentiles
+                # raw StreamingQueryProgress dicts — perfbench reads
+                # per-batch durations (durationMs.triggerExecution and
+                # its phases) for its trigger latency figures
                 progress_out.extend(progresses)
     else:
         writer.start()

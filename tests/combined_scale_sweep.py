@@ -51,8 +51,8 @@ for _p in (_REPO, _TESTS_DIR):
 # renumbering) can never collide
 from scale_rehearsal import SHIFTS  # noqa: E402  (same dir at runtime)
 
-# the graded heaviest plans (top of BENCH_DETAIL across the round-10/11
-# committed runs) plus the historical heap-killer dedup/multimodal legs
+# the graded heaviest plans (slowest per-query timings of the round-10/11
+# catalog runs) plus the historical heap-killer dedup/multimodal legs
 HEAVY = [
     "dedup_embedding_cosine_pairs",
     "dedup_family_agreement",

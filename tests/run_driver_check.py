@@ -16,19 +16,7 @@ to replicate exactly that statistical shape):
 - ``--sample N --seed S``  run N entries drawn without replacement from
   the sorted catalog by ``random.Random(S)`` — seeding by round number
   makes the draw reproducible across the round;
-- ``--complement-of CORRECTNESS_rN.json[,CORRECTNESS_rM.json,...]``
-  restrict the draw (or the full run) to entries NOT in the UNION of
-  those files' keys — the driver has sampled the *same* 50 entries for
-  three consecutive rounds (r6=r7=r8), so ~155 entries are invisible
-  to it; this flag points the gate straight at the driver's blind spot
-  (round-8 verdict item 2 asks for the union of ALL CORRECTNESS files,
-  so the draw covers only never-driver-checked entries). The flag is
-  also repeatable; a shell glob works through xargs-style expansion:
-
-      python tests/run_driver_check.py --sample 50 --seed 9 \\
-          --complement-of "$(ls /root/repo/CORRECTNESS_r*.json | paste -sd,)"
-
-- default (no flag): the full catalog, as before.
+- default (no flag): the full catalog.
 """
 
 from __future__ import annotations
@@ -57,24 +45,16 @@ def canon(df):
 
 
 def select_names(all_names: list[str], names: str | None, sample: int | None,
-                 seed: int, exclude: set[str] | None = None) -> list[str]:
+                 seed: int) -> list[str]:
     """The subset to check: explicit names, a seeded random draw, or
-    everything. Sorted input so the draw is reproducible. ``exclude``
-    (the --complement-of set) is removed before sampling; --names
-    bypasses it (an explicit name is always honored)."""
+    everything. Sorted input so the draw is reproducible."""
     all_sorted = sorted(all_names)
     if names:
-        # explicit names bypass the exclusion — an operator asking for a
-        # specific entry always gets it
         picked = [n.strip() for n in names.split(",") if n.strip()]
         unknown = [n for n in picked if n not in set(all_sorted)]
         if unknown:
             raise SystemExit(f"unknown query names: {unknown}")
         return picked
-    if exclude:
-        all_sorted = [n for n in all_sorted if n not in exclude]
-        if not all_sorted:
-            raise SystemExit("--complement-of excluded every catalog entry")
     if sample is not None:
         # `if sample:` would let --sample 0 silently fall through to the
         # full catalog (round-5 advice) — reject non-positive explicitly.
@@ -91,22 +71,7 @@ def main() -> int:
     ap.add_argument("--sample", type=int, help="check N randomly drawn entries")
     ap.add_argument("--seed", type=int, default=0,
                     help="PRNG seed for --sample (use the round number)")
-    ap.add_argument("--complement-of", metavar="CORRECTNESS_JSON[,...]",
-                    action="append", default=[],
-                    help="exclude these driver CORRECTNESS files' keys "
-                         "(comma-separated and/or repeated) — check the "
-                         "entries the driver never samples")
     args = ap.parse_args()
-    exclude: set[str] = set()
-    for spec in args.complement_of:
-        import json
-
-        for path in (p.strip() for p in spec.split(",") if p.strip()):
-            with open(path) as f:
-                keys = set(json.load(f))
-            if not keys:
-                raise SystemExit(f"{path} has no query keys")
-            exclude |= keys
     sf_dir = args.sf_dir
     entry_path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "__spark_entry__.py")
     spec = importlib.util.spec_from_file_location("__spark_entry__", entry_path)
@@ -139,9 +104,7 @@ def main() -> int:
     fails, rows_only = [], 0
     queries = mod.queries()
     oracles = mod.oracle_sql()
-    selected = select_names(
-        list(queries), args.names, args.sample, args.seed, exclude
-    )
+    selected = select_names(list(queries), args.names, args.sample, args.seed)
     for name in selected:
         sdf = queries[name](spark, sf_dir).toPandas()
         C.release_ephemeral()  # per-query persists done once toPandas returns

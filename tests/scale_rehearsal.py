@@ -8,9 +8,11 @@ queries <= 1.21x at 3x data (docs/PLANS.md "Round-5 scale rehearsal").
 Usage (writes synthetic dirs under /tmp, never touches the repo or
 /root/testdata):
 
-    python /root/repo/tests/scale_rehearsal.py          # build + run (batch + streaming)
+    python /root/repo/tests/scale_rehearsal.py          # build + run
     python /root/repo/tests/scale_rehearsal.py --build-only
-    python /root/repo/tests/scale_rehearsal.py --streaming-only
+
+The streaming pipeline's throughput is measured by perfbench's
+``stream_drain`` workload, not here.
 
 Key strides keep joins referentially consistent across copies
 (orders.o_custkey moves with customer.c_custkey, etc.); region/nation
@@ -105,23 +107,7 @@ def main() -> int:
     if "--build-only" in sys.argv:
         return 0
 
-    from kafka_avro_order_processor_eg_4131_spark.catalog import REGISTRY
-    from kafka_avro_order_processor_eg_4131_spark.operators import cache as C
-    from kafka_avro_order_processor_eg_4131_spark.session import get_spark
-
-    if "--streaming-only" in sys.argv:
-        spark = get_spark(app_name="scale-rehearsal-streaming")
-        spark.sparkContext.setLogLevel("ERROR")
-        bad = streaming_rehearsal(spark, dirs)
-        spark.stop()
-        return 1 if bad else 0
-
-    bad = batch_rehearsal(dirs)
-    spark = get_spark(app_name="scale-rehearsal-streaming")
-    spark.sparkContext.setLogLevel("ERROR")
-    bad += streaming_rehearsal(spark, dirs)
-    spark.stop()
-    return 1 if bad else 0
+    return 1 if batch_rehearsal(dirs) else 0
 
 
 def batch_rehearsal(
@@ -172,47 +158,6 @@ def batch_rehearsal(
             leg.stop()
 
     return curvature_report(results, [n for n, _ in dirs], heavy)
-
-
-def streaming_rehearsal(spark, dirs: list[tuple[str, str]]) -> int:
-    """Round-5 verdict item 3: the batch top-10 have curvature evidence,
-    the flagship streaming pipeline (OCF decode -> route -> multi-sink
-    foreachBatch) did not. Replay the broker-free file-twin at each
-    volume (the synthetic dirs triple `orders`) and record rows/s vs
-    volume. The micro-batch COUNT is held fixed by bench_streaming
-    (repartition(4) + maxFilesPerTrigger=1), so per-batch commit
-    overhead is constant while rows triple — rows/s should rise or stay
-    flat; a FALLING rows/s at 3x exposes per-row cost growing with
-    volume, which 100 TB Kafka would amplify. Bad when rps3 < 0.8*rps1
-    or any leg errors. Each leg is bench.py's median-of-3."""
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo not in sys.path:
-        sys.path.insert(0, repo)
-    import bench
-
-    rows_per_sec: dict[str, tuple[float, int]] = {}
-    for sf_name, sf_dir in dirs:
-        try:
-            rps, n_rows, _lat, _steals = bench.bench_streaming(spark, sf_dir)
-        except Exception as e:  # noqa: BLE001 — report and keep sweeping
-            rps, n_rows = -1.0, -1
-            print(f"ERR streaming_pipeline @ {sf_name}: {type(e).__name__}: {e}",
-                  file=sys.stderr)
-        rows_per_sec[sf_name] = (rps, n_rows)
-        print(f"{sf_name} streaming_pipeline: {rps:.1f} rows/s rows={n_rows}",
-              flush=True)
-
-    names = [n for n, _ in dirs]
-    print("\n| leg | " + " | ".join(f"{n} rows/s" for n in names)
-          + " | rps3/rps1 | rows 1->3 |")
-    print("|---" * (len(names) + 3) + "|")
-    rps = [rows_per_sec[n][0] for n in names]
-    rows = [rows_per_sec[n][1] for n in names]
-    ratio = rps[-1] / rps[0] if rps[0] > 0 else float("nan")
-    bad = int(ratio < 0.8 or any(r < 0 for r in rps) or any(n < 0 for n in rows))
-    cells = " | ".join(f"{r:.1f}" for r in rps)
-    print(f"| streaming_pipeline | {cells} | {ratio:.2f} | {rows[0]}->{rows[-1]} |")
-    return bad
 
 
 def curvature_report(

@@ -240,3 +240,56 @@ def test_decode_udf_empty_first_block_falls_back(spark):
         df.select(dec(F.col("value")).alias("o")).select("o.orderId").collect()
     )
     assert [r["orderId"] for r in got] == ["x", "x"]
+
+
+def test_encode_udf_bytes_equal_ocf_encode(spark):
+    """ocf_encode_udf assembles the header once per batch; its bytes
+    must still equal ocf_encode(schema, [row]) row by row, including
+    non-ASCII text, strings of 64+ bytes (2-byte length varints) and
+    the float32 edge prices: signed zeros, infinities, subnormals."""
+    from pyspark.sql import functions as F
+
+    from kafka_avro_order_processor_eg_4131_spark.functions.avro_ocf import (
+        ocf_encode_udf,
+    )
+    from kafka_avro_order_processor_eg_4131_spark.schemas import (
+        ORDER_AVRO_SCHEMA_JSON,
+    )
+    from kafka_avro_order_processor_eg_4131_spark.shipping import ship_package
+
+    def f32(x: float) -> float:
+        return struct.unpack("<f", struct.pack("<f", x))[0]
+
+    min_subnormal = struct.unpack("<f", b"\x01\x00\x00\x00")[0]
+    max_subnormal = struct.unpack("<f", b"\xff\xff\x7f\x00")[0]
+    rows = [
+        ("o-0", "Amber Wallet", f32(822.13)),
+        ("ördér-ñ", "咖啡杯 ☕ mug", 0.0),
+        ("o-2", "é" * 40, -0.0),  # 80 UTF-8 bytes: 2-byte varint
+        ("x" * 64, "p" * 200, math.inf),
+        ("o-4", "€" * 22, -math.inf),  # 66 UTF-8 bytes
+        ("o-5", "", min_subnormal),
+        ("o-6", "🙂" * 16, -max_subnormal),  # 64 UTF-8 bytes exactly
+    ]
+    ship_package(spark)
+    enc = ocf_encode_udf(ORDER_AVRO_SCHEMA_JSON)
+    df = spark.createDataFrame(
+        [(i, *r) for i, r in enumerate(rows)],
+        "i int, orderId string, product string, price float",
+    ).repartition(1)
+    got = {
+        r["i"]: bytes(r["v"])
+        for r in df.select(
+            "i", enc(F.struct("orderId", "product", "price")).alias("v")
+        ).collect()
+    }
+    assert len(got) == len(rows)
+    for i, (order_id, product, price) in enumerate(rows):
+        want = ocf_encode(
+            ORDER_AVRO_SCHEMA,
+            [{"orderId": order_id, "product": product, "price": price}],
+        )
+        assert got[i] == want, (i, order_id)
+        # price is the last field, just before the trailing sync marker:
+        # its bit pattern (sign of zero included) survives Spark and Arrow
+        assert got[i][-20:-16] == struct.pack("<f", price), (i, price)

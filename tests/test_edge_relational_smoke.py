@@ -104,7 +104,7 @@ def build_edge_rel_fixture(
 ) -> None:
     """Write the full edge fixture set under ``d`` (a pathlib.Path).
     Pure pyarrow — callable from scripts as well as the pytest fixture
-    (tests/aging_probe.py-style ad-hoc probing needs it outside pytest).
+    (ad-hoc probing needs it outside pytest).
 
     ``empty=True`` writes every table with ITS REAL SCHEMA but zero
     rows — the empty-day-partition shape (a source with no data yet) —

@@ -219,39 +219,12 @@ def test_memo_swept_lock_retries_instead_of_duplicate_build(spark):
 
 
 class TestStreamingLatencyPercentiles:
-    def test_pctile_nearest_rank(self):
-        import bench
-
-        vals = [float(v) for v in range(1, 11)]
-        assert bench._pctile(vals, 0.50) == 5.0
-        assert bench._pctile(vals, 0.95) == 10.0
-        assert bench._pctile([7.0], 0.95) == 7.0
-
-    def test_bench_line_carries_latency_keys(self):
-        import json
-
-        import bench
-
-        line = bench.format_bench_line(
-            {"q": 1.0},
-            1.0,
-            0.1,
-            streaming_rows_per_sec=1000.0,
-            streaming_batch_ms={"p50": 800.0, "p95": 1500.0},
-            streaming_rep_steal_pct=[0.1, 2.5, 0.0, None, 0.3],
-        )
-        d = json.loads(line)
-        assert d["streaming_batch_ms_p50"] == 800.0
-        assert d["streaming_batch_ms_p95"] == 1500.0
-        assert d["streaming_rep_steal_pct"] == [0.1, 2.5, 0.0, None, 0.3]
-        assert len(line.encode()) <= bench.MAX_LINE_BYTES
-
     def test_pipeline_progress_out_captures_batch_durations(
         self, spark, tmp_path
     ):
         """progress_out must surface one progress entry per micro-batch
-        with a readable duration — the raw material for the bench
-        line's p50/p95."""
+        with a readable duration — the raw material for perfbench's
+        trigger latency figures."""
         from kafka_avro_order_processor_eg_4131_spark.functions.avro_ocf import (
             ocf_encode,
         )
@@ -322,17 +295,9 @@ class TestRehearsalExitOnError:
         """main() must translate a nonzero bad count into exit code 1 —
         the contract the round-6 close claimed but never pinned."""
         mod = _load_by_path("scale_rehearsal")
-        dummy = SimpleNamespace(
-            sparkContext=SimpleNamespace(setLogLevel=lambda _lvl: None),
-            stop=lambda: None,
-        )
-        import kafka_avro_order_processor_eg_4131_spark.session as sess
-
         monkeypatch.setattr(mod, "batch_rehearsal", lambda dirs: 1)
-        monkeypatch.setattr(mod, "streaming_rehearsal", lambda spark, dirs: 0)
         monkeypatch.setattr(mod, "build", lambda n, out: None)
         monkeypatch.setattr(mod.os.path, "exists", lambda _p: True)
-        monkeypatch.setattr(sess, "get_spark", lambda **kw: dummy)
         assert mod.main() == 1
         monkeypatch.setattr(mod, "batch_rehearsal", lambda dirs: 0)
         assert mod.main() == 0
