@@ -8,8 +8,8 @@ queries <= 1.21x at 3x data (docs/PLANS.md "Round-5 scale rehearsal").
 Usage (writes synthetic dirs under /tmp, never touches the repo or
 /root/testdata):
 
-    python /root/repo/tests/scale_rehearsal.py          # build + run
-    python /root/repo/tests/scale_rehearsal.py --build-only
+    python tests/scale_rehearsal.py          # build + run
+    python tests/scale_rehearsal.py --build-only
 
 The streaming pipeline's throughput is measured by perfbench's
 ``stream_drain`` workload, not here.
