@@ -374,6 +374,11 @@ def ocf_encode_udf(schema_json: str):
     return pandas_udf(_encode, "binary")
 
 
+# Headers one decode batch remembers; a batch rarely carries more than a
+# couple of writer schemas, and a corrupt-header flood cannot grow it.
+_MAX_HEADERS = 16
+
+
 def ocf_decode_udf(schema_json: str, spark_type: str):
     """pandas UDF: OCF bytes -> struct column (``spark_type`` is the DDL
     string, e.g. ``orderId string, product string, price float``).
@@ -381,62 +386,75 @@ def ocf_decode_udf(schema_json: str, spark_type: str):
     it to the DLQ branch exactly like the reference's catch-all
     (consumer.py:272-276).
 
-    Fast path: in a homogeneous stream every container shares the exact
-    same header bytes (same embedded writer schema, codec, and sync
-    marker), so after fully parsing the first container the header is
-    matched by one prefix compare and the cursor jumps straight to the
-    data block. Any row whose prefix differs (evolved schema, corrupt
-    bytes) falls back to the general parser."""
+    Header table: every container from one writer schema starts with the
+    same header bytes (embedded schema, codec, sync marker), so each
+    batch keeps a small table of headers already parsed. A row whose
+    bytes start with a known header (the last hit is tried first) skips
+    straight to its data block; only a header not seen yet in the batch
+    is parsed, so a batch mixing writer schemas stays on the fast path.
+
+    Float fields leave as Arrow arrays: a pandas float column would
+    turn a NaN price (a legal Avro float) into null on its way into
+    Spark, and the row would read as undecodable."""
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.functions import pandas_udf
 
-    field_names = [f["name"] for f in json.loads(schema_json)["fields"]]
+    fields = json.loads(schema_json)["fields"]
+    field_names = [f["name"] for f in fields]
+    arrow_floats = {
+        f["name"]: pa.float32() if f["type"] == "float" else pa.float64()
+        for f in fields
+        if f["type"] in ("float", "double")
+    }
 
     def _decode(col):
         columns: dict[str, list] = {n: [] for n in field_names}
-        known_prefix: bytes | None = None
-        known_readers = None
-        known_sync = b""
+        # header bytes -> (field readers, sync marker)
+        headers: dict[bytes, tuple[list, bytes]] = {}
+        last = b""
+        readers: list = []
+        sync = b""
         for blob in col:
             try:
                 b = bytes(blob)
-                if known_prefix is not None and b.startswith(known_prefix):
-                    buf = io.BytesIO(b)
-                    buf.seek(len(known_prefix))
-                    n_rec = read_long(buf)
-                    block = io.BytesIO(read_bytes(buf))
-                    if buf.read(16) != known_sync:
-                        raise ValueError("sync marker mismatch")
-                    if n_rec >= 1:
-                        rec = {
-                            name: reader(block) for name, reader in known_readers
-                        }
-                    else:  # empty first block: general multi-block parser
-                        rec = ocf_decode(b)
-                else:
-                    buf = io.BytesIO(b)
-                    schema, sync, header_end = _read_header(buf)
-                    readers = [
-                        (f["name"], _PRIMITIVE_READERS[f["type"]])
-                        for f in schema["fields"]
-                    ]
-                    n_rec = read_long(buf)
-                    block = io.BytesIO(read_bytes(buf))
-                    if buf.read(16) != sync:
-                        raise ValueError("sync marker mismatch")
-                    if n_rec >= 1:
-                        rec = {name: reader(block) for name, reader in readers}
-                    else:  # empty first block: general multi-block parser
-                        rec = ocf_decode(b)
-                    known_prefix = b[:header_end]
-                    known_readers = readers
-                    known_sync = sync
+                if not (last and b.startswith(last)):
+                    last = next((h for h in headers if b.startswith(h)), b"")
+                    if not last:
+                        buf = io.BytesIO(b)
+                        schema, sync, header_end = _read_header(buf)
+                        readers = [
+                            (f["name"], _PRIMITIVE_READERS[f["type"]])
+                            for f in schema["fields"]
+                        ]
+                        if len(headers) >= _MAX_HEADERS:
+                            del headers[next(iter(headers))]
+                        last = b[:header_end]
+                        headers[last] = (readers, sync)
+                    readers, sync = headers[last]
+                buf = io.BytesIO(b)
+                buf.seek(len(last))
+                n_rec = read_long(buf)
+                block = io.BytesIO(read_bytes(buf))
+                if buf.read(16) != sync:
+                    raise ValueError("sync marker mismatch")
+                if n_rec >= 1:
+                    rec = {name: reader(block) for name, reader in readers}
+                else:  # empty first block: general multi-block parser
+                    rec = ocf_decode(b)
                 for n in field_names:
                     columns[n].append(rec.get(n))
             except Exception:
                 for n in field_names:  # all-null row -> DLQ branch downstream
                     columns[n].append(None)
-        return pd.DataFrame(columns)
+        return pd.DataFrame(
+            {
+                n: pd.arrays.ArrowExtensionArray(pa.array(v, type=arrow_floats[n]))
+                if n in arrow_floats
+                else v
+                for n, v in columns.items()
+            }
+        )
 
     return pandas_udf(_decode, spark_type)
 

@@ -77,7 +77,11 @@ def dlq_error_reason_expr(price: Column) -> Column:
     'inf'). A NaN price can reach the permanent branch (NaN routes
     permanent under total-order comparison), so the engine pins the
     reference's own rendering — Python ``str()``: 'nan', 'inf',
-    '-inf' — on both sides (see dlq_error_reason_case_sql)."""
+    '-inf' — on both sides (see dlq_error_reason_case_sql).
+
+    Callers: the streaming pipeline's DLQ ``error_reason`` header
+    (streaming/pipeline.py ``process_batch``) and the catalog's
+    ``route_permanent_dlq`` (plans/parity.py), so both render one text."""
     p = price.cast("double")
     thr = PERMANENT_THRESHOLD
     return (

@@ -74,6 +74,48 @@ def _session_key(spark: SparkSession) -> int:
     return id(spark.sparkContext)
 
 
+def _build_once(
+    registry: dict,
+    building: dict[tuple[int, str, str], threading.Lock],
+    key: tuple[int, str, str],
+    label: str,
+    builder: Callable[[], object],
+):
+    """Return ``registry[key]``, running ``builder`` to fill it on first
+    use. Builds run under a PER-KEY lock from ``building`` (round-4
+    advice: the unlocked check-then-act stranded a racing duplicate) —
+    per-key, not the module lock, so a multi-second build of one key
+    never serializes unrelated keys — and the registry is re-checked
+    after the lock is acquired, so the second of two racing callers
+    sees the first's result."""
+    for _ in range(_MAX_BUILD_RETRIES):
+        with _LOCK:
+            if key in registry:
+                return registry[key]
+            build_lock = building.setdefault(key, threading.Lock())
+        with build_lock:
+            with _LOCK:
+                if key in registry:
+                    return registry[key]
+                if building.get(key) is not build_lock:
+                    # Swept by release_families between our setdefault and
+                    # acquire (we held nothing yet, so `not lock.locked()`
+                    # was true) — a later caller may already hold a FRESH
+                    # lock for this key. Retry with the current registry
+                    # lock so two builders can never run concurrently
+                    # under different lock objects (round-6 advice).
+                    continue
+            built = builder()
+            with _LOCK:
+                registry[key] = built
+                building.pop(key, None)
+            return built
+    raise RuntimeError(
+        f"{label}: build lock swept {_MAX_BUILD_RETRIES} times in a "
+        "row — a release_families() storm is racing this builder"
+    )
+
+
 def family(
     spark: SparkSession,
     name: str,
@@ -85,51 +127,25 @@ def family(
     building (and persisting) it on first use. ``eager`` materializes
     the cache immediately — for relations whose consumers would
     otherwise race to fill it with concurrent jobs."""
-    key = (_session_key(spark), name, sf_dir)
-    # Build under the PER-KEY lock (round-4 advice: the unlocked
-    # check-then-act stranded a racing duplicate). Per-key, not the
-    # module lock, so an eager multi-second materialization of one
-    # family never serializes unrelated families.
-    for _ in range(_MAX_BUILD_RETRIES):
-        with _LOCK:
-            df = _FAMILY.get(key)
-            if df is not None:
-                return df
-            build_lock = _FAMILY_BUILDING.setdefault(key, threading.Lock())
-        with build_lock:
-            with _LOCK:
-                df = _FAMILY.get(key)
-                if df is not None:
-                    return df
-                if _FAMILY_BUILDING.get(key) is not build_lock:
-                    # Swept by release_families between our setdefault and
-                    # acquire (we held nothing yet, so `not lock.locked()`
-                    # was true) — a later caller may already hold a FRESH
-                    # lock for this key. Retry with the current registry
-                    # lock so two builders can never run concurrently
-                    # under different lock objects (round-6 advice).
-                    continue
-            built = builder().persist()
-            if eager:
+
+    def persisted() -> DataFrame:
+        built = builder().persist()
+        if eager:
+            try:
+                built.count()
+            except Exception:
+                # A failed materialization must not strand an
+                # owner-less persist — the exact leak class this
+                # registry exists to eliminate (round-3 advice).
                 try:
-                    built.count()
+                    built.unpersist(blocking=False)
                 except Exception:
-                    # A failed materialization must not strand an
-                    # owner-less persist — the exact leak class this
-                    # registry exists to eliminate (round-3 advice).
-                    try:
-                        built.unpersist(blocking=False)
-                    except Exception:
-                        pass
-                    raise
-            with _LOCK:
-                _FAMILY[key] = built
-                _FAMILY_BUILDING.pop(key, None)
-            return built
-    raise RuntimeError(
-        f"family({name!r}): build lock swept {_MAX_BUILD_RETRIES} times in a "
-        "row — a release_families() storm is racing this builder"
-    )
+                    pass
+                raise
+        return built
+
+    key = (_session_key(spark), name, sf_dir)
+    return _build_once(_FAMILY, _FAMILY_BUILDING, key, f"family({name!r})", persisted)
 
 
 _MEMO: dict[tuple[int, str, str], object] = {}
@@ -148,38 +164,14 @@ def memo(spark: SparkSession, name: str, sf_dir: str, builder: Callable[[], obje
     the entries hold only checkpointed/lazy DataFrames, so dropping the
     reference lets the ContextCleaner reclaim the checkpoint blocks.
 
-    Builds run under a PER-KEY lock (not the module lock — BPE training
-    is minutes-scale and must not serialize unrelated memo keys), so
-    two racing callers for the same key serialize on one lock and the
-    second sees the first's result. The identity re-check after acquire
-    closes the sweep window (see family()); the one residual overlap is
-    a release_families() issued DURING an in-flight build — the new
-    caller then correctly rebuilds post-release while the doomed build
-    drains, which is the release's documented semantics, not a leak."""
+    Builds serialize per key like family()'s (BPE training is
+    minutes-scale and must not serialize unrelated memo keys). The one
+    residual overlap is a release_families() issued DURING an in-flight
+    build — the new caller then correctly rebuilds post-release while
+    the doomed build drains, which is the release's documented
+    semantics, not a leak."""
     key = (_session_key(spark), name, sf_dir)
-    for _ in range(_MAX_BUILD_RETRIES):
-        with _LOCK:
-            if key in _MEMO:
-                return _MEMO[key]
-            build_lock = _MEMO_BUILDING.setdefault(key, threading.Lock())
-        with build_lock:
-            with _LOCK:
-                if key in _MEMO:
-                    return _MEMO[key]
-                if _MEMO_BUILDING.get(key) is not build_lock:
-                    # Swept between setdefault and acquire — retry with
-                    # the current registry lock (round-6 advice; same
-                    # window as family()).
-                    continue
-            obj = builder()
-            with _LOCK:
-                _MEMO[key] = obj
-                _MEMO_BUILDING.pop(key, None)
-            return obj
-    raise RuntimeError(
-        f"memo({name!r}): build lock swept {_MAX_BUILD_RETRIES} times in a "
-        "row — a release_families() storm is racing this builder"
-    )
+    return _build_once(_MEMO, _MEMO_BUILDING, key, f"memo({name!r})", builder)
 
 
 def is_cached(spark: SparkSession, name: str, sf_dir: str) -> bool:

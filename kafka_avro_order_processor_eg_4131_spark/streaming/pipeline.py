@@ -9,7 +9,7 @@
                         success/DLQ; surfaced for redelivery)
 
 Delivery semantics: each micro-batch either fully commits (checkpoint
-advances after all three sinks succeed) or is replayed — at-least-once
+advances after all four sinks succeed) or is replayed — at-least-once
 per batch. This is deliberately stronger than the reference, whose
 per-record manual commit can silently skip past uncommitted transient
 offsets (the F2 lost-retry bug, SURVEY.md §2.6 — documented, not
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.avro_ocf import ocf_decode_udf
-from ..functions.routing import status_expr
+from ..functions.routing import dlq_error_reason_expr, status_expr
 from ..schemas import (
     ORDER_AVRO_SCHEMA_JSON,
     STATUS_PERMANENT,
@@ -199,10 +199,7 @@ def process_batch(batch: DataFrame, batch_id: int, sinks: PipelineSinks) -> None
                         permanent,
                         F.when(
                             F.col("order.price").isNotNull(),
-                            F.format_string(
-                                "Price exceeds threshold: %.2f > 1000.0",
-                                F.col("order.price").cast("double"),
-                            ),
+                            dlq_error_reason_expr(F.col("order.price")),
                         ).otherwise(
                             F.lit("Processing error: deserialization failed")
                         ),

@@ -32,7 +32,6 @@ Usage (from any cwd; writes only under /tmp):
 from __future__ import annotations
 
 import os
-import shutil
 import sys
 import time
 from pathlib import Path
@@ -49,7 +48,7 @@ for _p in (_REPO, _TESTS_DIR):
 # key strides (match tests/scale_rehearsal.py): large enough that ten
 # shifted copies of the combined corpus (class offsets <= 500k + skew
 # renumbering) can never collide
-from scale_rehearsal import SHIFTS  # noqa: E402  (same dir at runtime)
+from scale_rehearsal import SHIFTS, build_atomically  # noqa: E402  (same dir at runtime)
 
 # the graded heaviest plans (slowest per-query timings of the round-10/11
 # catalog runs) plus the historical heap-killer dedup/multimodal legs
@@ -127,12 +126,10 @@ def main() -> int:
         n_copies = int(sys.argv[sys.argv.index("--copies") + 1])
     base = Path(OUT) / "combined_x1"
     big = Path(OUT) / f"combined_x{n_copies}"
-    if not (base / "lineitem.parquet").exists():
-        print("building combined-edge base corpus ...", flush=True)
-        build_base(base)
-    if not (big / "lineitem.parquet").exists():
-        print(f"building {n_copies}x key-shifted corpus ...", flush=True)
-        build_nx(base, big, n_copies)
+    if build_atomically(str(base), lambda tmp: build_base(Path(tmp))):
+        print("built combined-edge base corpus", flush=True)
+    if build_atomically(str(big), lambda tmp: build_nx(base, Path(tmp), n_copies)):
+        print(f"built {n_copies}x key-shifted corpus", flush=True)
     if "--build-only" in sys.argv:
         return 0
 

@@ -92,6 +92,23 @@ def build(n_copies: int, out_dir: str, src: str = SRC) -> None:
         con.execute(f"COPY ({union}) TO '{out_dir}/{t}.parquet' (FORMAT PARQUET)")
 
 
+def build_atomically(out_dir: str, build_into) -> bool:
+    """Run ``build_into(tmp_dir)`` unless ``out_dir`` exists, then rename
+    the finished dir into place. A build that raises or is killed never
+    leaves ``out_dir`` behind, so a later run cannot mistake a partial
+    build for a complete one. Returns True when it built."""
+    if os.path.exists(out_dir):
+        return False
+    tmp = f"{out_dir}.building-{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    try:
+        build_into(tmp)
+        os.replace(tmp, out_dir)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return True
+
+
 def main() -> int:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if repo not in sys.path:
@@ -100,8 +117,7 @@ def main() -> int:
     dirs = [("sf0.1", SRC)]
     for n in (2, 3):
         out = f"{OUT}/sfx0.{n}"
-        if not os.path.exists(f"{out}/lineitem.parquet"):
-            build(n, out)
+        if build_atomically(out, lambda tmp, n=n: build(n, tmp)):
             print(f"built {out}")
         dirs.append((f"sfx0.{n}", out))
     if "--build-only" in sys.argv:

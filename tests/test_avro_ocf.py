@@ -293,3 +293,50 @@ def test_encode_udf_bytes_equal_ocf_encode(spark):
         # price is the last field, just before the trailing sync marker:
         # its bit pattern (sign of zero included) survives Spark and Arrow
         assert got[i][-20:-16] == struct.pack("<f", price), (i, price)
+
+
+def test_decode_udf_parses_each_header_once(monkeypatch):
+    """A batch alternating two writer schemas parses each distinct
+    container header once, not once per schema switch; every row still
+    decodes, and a NaN price stays NaN rather than becoming null."""
+    import pandas as pd
+    import pyspark.sql.functions as PF
+
+    from kafka_avro_order_processor_eg_4131_spark.functions import avro_ocf as A
+    from kafka_avro_order_processor_eg_4131_spark.schemas import (
+        ORDER_AVRO_SCHEMA_JSON,
+    )
+
+    calls = []
+    real_read_header = A._read_header
+
+    def counting_read_header(buf):
+        calls.append(1)
+        return real_read_header(buf)
+
+    monkeypatch.setattr(A, "_read_header", counting_read_header)
+    # the decoder's Python function itself, without a Spark session
+    monkeypatch.setattr(PF, "pandas_udf", lambda f, returnType: f)
+    evolved = {
+        "type": "record",
+        "name": "Order",
+        "fields": ORDER_AVRO_SCHEMA["fields"] + [{"name": "warehouse", "type": "string"}],
+    }
+    blobs = []
+    for i in range(40):
+        rec = {"orderId": f"o{i}", "product": "P", "price": float(i)}
+        if i % 2:
+            blobs.append(ocf_encode(evolved, [{**rec, "warehouse": "W1"}]))
+        else:
+            blobs.append(ocf_encode(ORDER_AVRO_SCHEMA, [rec]))
+    blobs.append(
+        ocf_encode(ORDER_AVRO_SCHEMA, [{"orderId": "n", "product": "P", "price": math.nan}])
+    )
+    decode = A.ocf_decode_udf(
+        ORDER_AVRO_SCHEMA_JSON, "orderId string, product string, price float"
+    )
+    out = decode(pd.Series(blobs))
+    assert len(calls) <= 2
+    assert out["orderId"].tolist() == [f"o{i}" for i in range(40)] + ["n"]
+    assert out["price"].tolist()[:40] == [float(i) for i in range(40)]
+    assert math.isnan(out["price"].iloc[40])

@@ -175,3 +175,51 @@ def test_observed_metrics_match_reference_counters(spark, tmp_path, envelope_dir
         f32(p) for _, _, p in FROZEN_ORDERS if not (5.0 <= p <= 50.0) and p <= 1000.0
     )
     assert abs(total_price - expected) < 1e-9
+
+
+def test_dlq_reason_for_non_finite_prices(spark, tmp_path):
+    """NaN and +Inf prices route permanent; the pipeline's DLQ header
+    renders them as the reference's Python ``%.2f`` does ('nan', 'inf'),
+    the same text the catalog's dlq_error_reason_expr gives."""
+    from pyspark.sql import functions as F
+
+    from kafka_avro_order_processor_eg_4131_spark.functions.routing import (
+        dlq_error_reason_expr,
+    )
+    from kafka_avro_order_processor_eg_4131_spark.streaming.pipeline import (
+        run_order_pipeline,
+    )
+
+    prices = {"o-nan": float("nan"), "o-inf": float("inf")}
+    rows = [
+        (
+            oid.encode(),
+            ocf_encode(ORDER_AVRO_SCHEMA, [{"orderId": oid, "product": "P", "price": p}]),
+            "orders",
+            0,
+            i,
+        )
+        for i, (oid, p) in enumerate(prices.items())
+    ]
+    input_dir = str(tmp_path / "input")
+    spark.createDataFrame(
+        rows, "key binary, value binary, topic string, partition int, offset long"
+    ).coalesce(1).write.parquet(input_dir)
+
+    sinks = run_order_pipeline(spark, input_dir, str(tmp_path / "work"))
+    reasons = {
+        bytes(r["key"]).decode(): {h["key"]: bytes(h["value"]) for h in r["headers"]}[
+            "error_reason"
+        ]
+        for r in spark.read.parquet(sinks.dlq_dir).collect()
+    }
+    assert reasons == {
+        "o-nan": b"Price exceeds threshold: nan > 1000.0",
+        "o-inf": b"Price exceeds threshold: inf > 1000.0",
+    }
+    catalog_text = (
+        spark.createDataFrame([(p,) for p in prices.values()], "price float")
+        .select(dlq_error_reason_expr(F.col("price")).alias("r"))
+        .collect()
+    )
+    assert sorted(r["r"].encode() for r in catalog_text) == sorted(reasons.values())

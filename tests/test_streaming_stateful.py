@@ -1,7 +1,6 @@
 """Multi-batch streaming tests: the aggregate trajectory across batch
 boundaries matches the reference's per-message trajectory sampled at
-the same points (SURVEY.md §5.2), and applyInPandasWithState keeps the
-accumulators across batches."""
+the same points (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
@@ -46,38 +45,22 @@ def batch_dirs(spark, tmp_path):
 
 
 def test_agg_trajectory_across_batches(spark, tmp_path, batch_dirs):
-    """Cumulative (order_count, total_price) after each batch must equal
-    the reference's accumulators sampled at those message indices."""
+    """Cumulative (message_count, order_count, total_price) after each
+    batch must equal the reference's accumulators sampled at those
+    message indices, and the final running average its summary
+    (consumer.py:194-206)."""
     from kafka_avro_order_processor_eg_4131_spark.streaming.pipeline import (
-        PipelineSinks,
-        decode_orders,
-        process_batch,
-        route_orders,
+        run_order_pipeline,
     )
-    import os
 
-    work = str(tmp_path / "work")
-    sinks = PipelineSinks(
-        success_dir=os.path.join(work, "success"),
-        dlq_dir=os.path.join(work, "dlq"),
-        retry_dir=os.path.join(work, "retry"),
-        agg_dir=os.path.join(work, "agg"),
+    observed: list = []
+    sinks = run_order_pipeline(
+        spark,
+        batch_dirs,
+        str(tmp_path / "work"),
+        observed_metrics=observed,
+        max_files_per_trigger=1,
     )
-    envelope = (
-        spark.readStream.schema(
-            "key binary, value binary, topic string, partition int, offset long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(batch_dirs)
-    )
-    routed = route_orders(decode_orders(envelope))
-    q = (
-        routed.writeStream.foreachBatch(lambda df, bid: process_batch(df, bid, sinks))
-        .option("checkpointLocation", os.path.join(work, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
     agg = sorted(
         spark.read.parquet(sinks.agg_dir).collect(), key=lambda r: r["batch_id"]
@@ -97,46 +80,18 @@ def test_agg_trajectory_across_batches(spark, tmp_path, batch_dirs):
         running_total += total
     assert running_n == 4
     # and the final totals match the whole-stream reference computation
-    assert abs(running_total - (f32(100.0) + f32(200.0) + f32(55.5) + f32(999.99))) < 1e-9
-
-
-def test_stateful_running_accumulators(spark, tmp_path, batch_dirs):
-    """applyInPandasWithState keeps the accumulators ACROSS batches —
-    the last emitted row equals the reference's final summary
-    (consumer.py:194-206)."""
-    from kafka_avro_order_processor_eg_4131_spark.streaming.pipeline import (
-        decode_orders,
-        route_orders,
-    )
-    from kafka_avro_order_processor_eg_4131_spark.streaming.stateful import (
-        running_order_stats,
-    )
-
-    envelope = (
-        spark.readStream.schema(
-            "key binary, value binary, topic string, partition int, offset long"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(batch_dirs)
-    )
-    stats = running_order_stats(route_orders(decode_orders(envelope)))
-    out = []
-    q = (
-        stats.writeStream.foreachBatch(lambda df, bid: out.append((bid, df.collect())))
-        .option("checkpointLocation", str(tmp_path / "ckpt2"))
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    rows = [r for _, batch in sorted(out) for r in batch]
-    assert len(rows) == 3
-    final = rows[-1]
-    assert final["message_count"] == 8
-    assert final["order_count"] == 4
     expected_total = f32(100.0) + f32(200.0) + f32(55.5) + f32(999.99)
-    assert abs(final["total_price"] - expected_total) < 1e-9
-    assert abs(final["running_average"] - expected_total / 4) < 1e-9
-    # trajectory is monotone in message_count: batch boundaries 3, 5, 8
-    assert [r["message_count"] for r in rows] == [3, 5, 8]
+    assert abs(running_total - expected_total) < 1e-9
+    assert abs(running_total / running_n - expected_total / 4) < 1e-9
+
+    # the observed metrics carry the same accumulators per batch; their
+    # running message_count crosses the batch boundaries at 3, 5, 8
+    trajectory, seen = [], 0
+    for m in observed:
+        seen += m["message_count"]
+        trajectory.append(seen)
+    assert trajectory == [3, 5, 8]
+    obs_n = sum(m["order_count"] for m in observed)
+    obs_total = sum(m["total_price"] or 0.0 for m in observed)
+    assert obs_n == 4
+    assert abs(obs_total / obs_n - expected_total / 4) < 1e-9
