@@ -374,11 +374,6 @@ def ocf_encode_udf(schema_json: str):
     return pandas_udf(_encode, "binary")
 
 
-# Headers one decode batch remembers; a batch rarely carries more than a
-# couple of writer schemas, and a corrupt-header flood cannot grow it.
-_MAX_HEADERS = 16
-
-
 def ocf_decode_udf(schema_json: str, spark_type: str):
     """pandas UDF: OCF bytes -> struct column (``spark_type`` is the DDL
     string, e.g. ``orderId string, product string, price float``).
@@ -386,12 +381,13 @@ def ocf_decode_udf(schema_json: str, spark_type: str):
     it to the DLQ branch exactly like the reference's catch-all
     (consumer.py:272-276).
 
-    Header table: every container from one writer schema starts with the
-    same header bytes (embedded schema, codec, sync marker), so each
-    batch keeps a small table of headers already parsed. A row whose
-    bytes start with a known header (the last hit is tried first) skips
-    straight to its data block; only a header not seen yet in the batch
-    is parsed, so a batch mixing writer schemas stays on the fast path.
+    Header cache: every container ``ocf_encode`` writes for one schema
+    starts with the same header bytes (embedded schema, codec,
+    deterministic sync marker), so the decoder keeps the last header it
+    parsed. A row whose bytes start with it skips straight to its data
+    block; any other row parses its own header, which replaces the
+    cached one. Containers from the reference's producer carry a random
+    sync marker each, so every one of them parses its header.
 
     Float fields leave as Arrow arrays: a pandas float column would
     turn a NaN price (a legal Avro float) into null on its way into
@@ -410,28 +406,19 @@ def ocf_decode_udf(schema_json: str, spark_type: str):
 
     def _decode(col):
         columns: dict[str, list] = {n: [] for n in field_names}
-        # header bytes -> (field readers, sync marker)
-        headers: dict[bytes, tuple[list, bytes]] = {}
-        last = b""
+        last = b""  # header bytes of the last parsed container
         readers: list = []
         sync = b""
         for blob in col:
             try:
                 b = bytes(blob)
                 if not (last and b.startswith(last)):
-                    last = next((h for h in headers if b.startswith(h)), b"")
-                    if not last:
-                        buf = io.BytesIO(b)
-                        schema, sync, header_end = _read_header(buf)
-                        readers = [
-                            (f["name"], _PRIMITIVE_READERS[f["type"]])
-                            for f in schema["fields"]
-                        ]
-                        if len(headers) >= _MAX_HEADERS:
-                            del headers[next(iter(headers))]
-                        last = b[:header_end]
-                        headers[last] = (readers, sync)
-                    readers, sync = headers[last]
+                    schema, new_sync, header_end = _read_header(io.BytesIO(b))
+                    readers = [
+                        (f["name"], _PRIMITIVE_READERS[f["type"]])
+                        for f in schema["fields"]
+                    ]
+                    sync, last = new_sync, b[:header_end]
                 buf = io.BytesIO(b)
                 buf.seek(len(last))
                 n_rec = read_long(buf)

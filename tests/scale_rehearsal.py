@@ -96,10 +96,11 @@ def build_atomically(out_dir: str, build_into) -> bool:
     """Run ``build_into(tmp_dir)`` unless ``out_dir`` exists, then rename
     the finished dir into place. A build that raises or is killed never
     leaves ``out_dir`` behind, so a later run cannot mistake a partial
-    build for a complete one. Returns True when it built."""
+    build for a complete one; the next build first removes what a killed
+    one left in ``<out_dir>.building``. Returns True when it built."""
     if os.path.exists(out_dir):
         return False
-    tmp = f"{out_dir}.building-{os.getpid()}"
+    tmp = f"{out_dir}.building"
     shutil.rmtree(tmp, ignore_errors=True)
     try:
         build_into(tmp)

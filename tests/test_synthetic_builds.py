@@ -50,12 +50,19 @@ def test_scale_rehearsal_failed_build_leaves_nothing_to_reuse(
         mod.main()
     assert _names(tmp_path) == []
 
+    # a build killed outright (no exception to clean up after) leaves
+    # its partial temp dir; the next build removes it first
+    killed = tmp_path / "sfx0.2.building"
+    killed.mkdir()
+    (killed / "stale.parquet").write_bytes(b"PAR1")
     monkeypatch.setattr(
         mod, "build", lambda n, out: _write_tables(out, fail_after_lineitem=False)
     )
     assert mod.main() == 0
     assert _names(tmp_path) == ["sfx0.2", "sfx0.3"]
-    assert "events.parquet" in _names(tmp_path / "sfx0.2")
+    assert _names(tmp_path / "sfx0.2") == [
+        "events.parquet", "lineitem.parquet", "orders.parquet"
+    ]
 
 
 def test_combined_sweep_failed_build_leaves_nothing_to_reuse(tmp_path, monkeypatch):
