@@ -14,8 +14,13 @@ Supported schema subset: records of string / float / double / int /
 long / boolean / bytes — a superset of the reference's Order schema
 (order.avsc: string, string, float).
 
-Spark integration: Arrow-batched pandas UDFs (``ocf_encode_udf`` /
-``ocf_decode_udf``). The per-row Python cost is confined to the codec
+Spark integration: four Arrow UDFs (``arrow_udf``) — OCF and raw-datum
+framings of one encoder and one decoder. Arrow arrays go in and come
+out; no pandas sits between the codec and Spark, so a NaN float stays
+NaN. Both decoders read through one schema-resolution plan per writer
+schema (``_resolution_plan``), the same one ``read_datum_resolved`` and
+``ocf_decode`` use, and their output struct type follows from the
+reader schema. The per-row Python cost is confined to the codec
 boundary exactly like the reference's fastavro calls; everything
 downstream of decode is JVM-side Catalyst.
 """
@@ -27,11 +32,6 @@ import io
 import json
 import struct
 from typing import Any
-
-try:  # pd.NA sentinel for arrow-backed nullable dtypes (advice r8)
-    from pandas import NA as _PD_NA
-except Exception:  # pragma: no cover - pandas always present in-container
-    _PD_NA = None
 
 # ---------------------------------------------------------------------------
 # varint / zigzag primitives (Avro spec §Binary encoding)
@@ -90,22 +90,13 @@ def read_bytes(buf: io.BytesIO) -> bytes:
 # ---------------------------------------------------------------------------
 
 def _has_null(vals) -> bool:
-    """True when any struct field is null as pandas renders it: None
-    for object/string columns, NaN for float columns, pd.NA for
-    arrow-backed nullable dtypes.
-
-    NOTE on NaN prices: pandas conflates SQL NULL and float NaN in
-    non-nullable float columns, so a genuinely-NaN price (a legal,
-    encodable Avro float) is indistinguishable from NULL here and is
-    routed to the NULL-datum/DLQ path rather than encoded. That is the
-    documented engine contract (the float-edge parity fixture pins it);
-    a caller that must encode NaN should pre-encode it as bits."""
-    return any(
-        v is None
-        or v is _PD_NA
-        or (isinstance(v, float) and v != v)
-        for v in vals
-    )
+    """True when any field value is null or a float NaN: the encoders
+    emit a NULL datum for such a record. The Order schema's fields are
+    non-nullable, so a null is unencodable. A NaN price is encodable
+    Avro, but the codec catalog queries pin it to the NULL-datum/DLQ
+    path (``avro_datum_roundtrip``'s oracle states this contract), so a
+    caller that must encode NaN should pre-encode it as bits."""
+    return any(v is None or (isinstance(v, float) and v != v) for v in vals)
 
 
 _PRIMITIVE_WRITERS = {
@@ -140,21 +131,8 @@ def write_datum(out: io.BytesIO, schema: dict, record: dict[str, Any]) -> None:
         writer(out, record[field["name"]])
 
 
-def read_datum(buf: io.BytesIO, schema: dict) -> dict[str, Any]:
-    if schema.get("type") != "record":
-        raise ValueError(f"unsupported top-level schema {schema.get('type')!r}")
-    rec: dict[str, Any] = {}
-    for field in schema["fields"]:
-        reader = _PRIMITIVE_READERS.get(field["type"])
-        if reader is None:
-            raise ValueError(f"unsupported field type {field['type']!r}")
-        rec[field["name"]] = reader(buf)
-    return rec
-
-
 # Avro spec §Schema Resolution: which writer->reader primitive
-# re-typings are legal (value passes through; Python numerics already
-# widen losslessly for these)
+# re-typings are legal
 _PROMOTIONS = {
     "int": {"int", "long", "float", "double"},
     "long": {"long", "float", "double"},
@@ -166,41 +144,66 @@ _PROMOTIONS = {
 }
 
 
+def _promoted_reader(wtype: str, rtype: str):
+    """Reads a ``wtype`` value off the wire as a ``rtype`` value."""
+    if rtype not in _PROMOTIONS.get(wtype, ()):
+        raise ValueError(f"cannot promote {wtype!r} -> {rtype!r}")
+    if wtype in ("int", "long") and rtype in ("float", "double"):
+        return lambda buf: float(read_long(buf))
+    if wtype in ("string", "bytes"):  # same wire form: length + bytes
+        return _PRIMITIVE_READERS[rtype]
+    return _PRIMITIVE_READERS[wtype]
+
+
+def _resolution_plan(writer_schema: dict, reader_schema: dict):
+    """Avro spec §Schema Resolution, primitive-record subset, planned
+    once per writer schema: fields match by name; writer-only fields
+    are decoded and discarded; reader-only fields take their declared
+    ``default`` (an error if absent — same as fastavro/the reference,
+    consumer.py:50-65 where reader-schema resolution is implicit in
+    ``fastavro.reader``); primitive promotions per the spec table.
+
+    Returns ``read(buf)``, which decodes one datum into a list of the
+    reader's field values in reader order."""
+    for schema in (writer_schema, reader_schema):
+        if schema.get("type") != "record":
+            raise ValueError(f"unsupported top-level schema {schema.get('type')!r}")
+    reader_fields = reader_schema["fields"]
+    slots = {f["name"]: i for i, f in enumerate(reader_fields)}
+    steps = []  # (read one writer field, reader slot or None to drop)
+    for wf in writer_schema["fields"]:
+        wtype = wf["type"]
+        if wtype not in _PRIMITIVE_READERS:
+            raise ValueError(f"unsupported field type {wtype!r}")
+        slot = slots.get(wf["name"])
+        if slot is None:
+            steps.append((_PRIMITIVE_READERS[wtype], None))
+        else:
+            steps.append((_promoted_reader(wtype, reader_fields[slot]["type"]), slot))
+    written = {wf["name"] for wf in writer_schema["fields"]}
+    for rf in reader_fields:
+        if rf["name"] not in written and "default" not in rf:
+            raise ValueError(f"reader field {rf['name']!r} missing and has no default")
+    template = [rf.get("default") for rf in reader_fields]
+
+    def read(buf: io.BytesIO) -> list:
+        values = template.copy()
+        for read_field, slot in steps:
+            value = read_field(buf)
+            if slot is not None:
+                values[slot] = value
+        return values
+
+    return read
+
+
 def read_datum_resolved(
     buf: io.BytesIO, writer_schema: dict, reader_schema: dict
 ) -> dict[str, Any]:
     """Decode a datum written with ``writer_schema`` into the shape of
-    ``reader_schema`` (Avro spec §Schema Resolution, primitive-record
-    subset): fields match by name; writer-only fields are decoded and
-    discarded; reader-only fields take their declared ``default`` (an
-    error if absent — same as fastavro/the reference, consumer.py:50-65
-    where reader-schema resolution is implicit in ``fastavro.reader``);
-    primitive promotions per the spec table."""
-    reader_fields = {f["name"]: f for f in reader_schema["fields"]}
-    rec: dict[str, Any] = {}
-    for wf in writer_schema["fields"]:
-        wtype = wf["type"]
-        reader = _PRIMITIVE_READERS.get(wtype)
-        if reader is None:
-            raise ValueError(f"unsupported field type {wtype!r}")
-        value = reader(buf)
-        rf = reader_fields.get(wf["name"])
-        if rf is None:
-            continue  # writer-only field: consumed and dropped
-        rtype = rf["type"]
-        if rtype not in _PROMOTIONS.get(wtype, ()):  # pragma: no cover - guard
-            raise ValueError(f"cannot promote {wtype!r} -> {rtype!r}")
-        if wtype == "string" and rtype == "bytes":
-            value = value.encode("utf-8")
-        elif wtype == "bytes" and rtype == "string":
-            value = value.decode("utf-8")
-        rec[wf["name"]] = value
-    for name, rf in reader_fields.items():
-        if name not in rec:
-            if "default" not in rf:
-                raise ValueError(f"reader field {name!r} missing and has no default")
-            rec[name] = rf["default"]
-    return rec
+    ``reader_schema`` (see ``_resolution_plan``)."""
+    values = _resolution_plan(writer_schema, reader_schema)(buf)
+    return dict(zip((f["name"] for f in reader_schema["fields"]), values))
 
 
 # ---------------------------------------------------------------------------
@@ -293,6 +296,9 @@ def ocf_decode(
     schema, sync, _ = _read_header(buf)
     if isinstance(reader_schema, str):
         reader_schema = json.loads(reader_schema)
+    reader_schema = reader_schema or schema
+    read = _resolution_plan(schema, reader_schema)
+    names = [f["name"] for f in reader_schema["fields"]]
 
     records: list[dict[str, Any]] = []
     while True:
@@ -304,10 +310,7 @@ def ocf_decode(
         if buf.read(16) != sync:
             raise ValueError("sync marker mismatch")
         for _ in range(n):
-            if reader_schema is None:
-                records.append(read_datum(block, schema))
-            else:
-                records.append(read_datum_resolved(block, schema, reader_schema))
+            records.append(dict(zip(names, read(block))))
             if first_only:
                 return records[0]
     if first_only:
@@ -316,7 +319,7 @@ def ocf_decode(
 
 
 # ---------------------------------------------------------------------------
-# Spark pandas-UDF bindings (Arrow-batched; no row-at-a-time pickling)
+# Spark Arrow-UDF bindings (Arrow arrays in and out; no row pickling)
 # ---------------------------------------------------------------------------
 
 
@@ -326,128 +329,132 @@ def _varint_bytes(n: int) -> bytes:
     return out.getvalue()
 
 
-def _encode_ctx(schema_json: str):
-    """Per-schema encode context: the container header + sync marker are
-    identical for every row (same schema, deterministic marker), so they
-    are assembled once per batch instead of once per row — the per-row
-    work reduces to the datum bytes plus three concatenations."""
-    schema_dict = json.loads(schema_json)
-    header = _header_bytes(json.dumps(schema_dict))
-    sync = header[-16:]
-    prefix = header + _varint_bytes(1)  # header + record count 1
-    writers = [
-        (f["name"], _PRIMITIVE_WRITERS[f["type"]]) for f in schema_dict["fields"]
-    ]
-    return prefix, sync, writers
+def _pylist(arr) -> list:
+    """Arrow array -> Python values, converted in C (``to_pylist`` builds
+    a scalar object per element and costs ~15x more). A null in a
+    numeric column arrives as NaN, which ``_has_null`` treats alike."""
+    return arr.to_numpy(zero_copy_only=False).tolist()
 
 
-def ocf_encode_udf(schema_json: str):
-    """pandas UDF: struct column -> OCF container bytes per row. The
-    produced bytes are identical to ``ocf_encode(schema, [row])``."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+def _encode_udf(schema_json: str, frame):
+    """Arrow UDF: struct column -> one ``frame(datum_bytes)`` per row.
+    A record with a null or NaN field gives a NULL row (``_has_null``);
+    downstream decode of NULL yields an all-null struct -> the DLQ
+    route."""
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
 
-    prefix, sync, writers = _encode_ctx(schema_json)
-    names = [n for n, _ in writers]
+    fields = json.loads(schema_json)["fields"]
+    names = [f["name"] for f in fields]
+    writers = [_PRIMITIVE_WRITERS[f["type"]] for f in fields]
 
     def _encode(rows):
-        cols = [rows[n] for n in names]
+        children = dict(zip((f.name for f in rows.type), rows.flatten()))
         out = []
-        for vals in zip(*cols):
+        for vals in zip(*(_pylist(children[n]) for n in names)):
             if _has_null(vals):
-                # this schema's primitives are all non-nullable: a null
-                # field is UNENCODABLE — emit NULL rather than silently
-                # stringifying (str(None) wrote a literal "None" until
-                # the round-8 edge probe caught it); downstream decode
-                # of NULL yields a null struct -> the DLQ route
                 out.append(None)
                 continue
             body = io.BytesIO()
-            for (_, writer), v in zip(writers, vals):
+            for writer, v in zip(writers, vals):
                 writer(body, v)
-            payload = body.getvalue()
-            out.append(prefix + _varint_bytes(len(payload)) + payload + sync)
-        return pd.Series(out, dtype=object)
+            out.append(frame(body.getvalue()))
+        return pa.array(out, type=pa.binary())
 
-    # hint-less form: PySpark 4 rejects DataFrame/struct signatures as
-    # type hints but accepts them with an explicit returnType
-    return pandas_udf(_encode, "binary")
+    return arrow_udf(_encode, "binary")
 
 
-def ocf_decode_udf(schema_json: str, spark_type: str):
-    """pandas UDF: OCF bytes -> struct column (``spark_type`` is the DDL
-    string, e.g. ``orderId string, product string, price float``).
-    Corrupt input decodes to null — the DataFrame-level null check routes
-    it to the DLQ branch exactly like the reference's catch-all
-    (consumer.py:272-276).
+def _decode_udf(reader_schema: dict, parse):
+    """Arrow UDF: binary column -> struct column typed by
+    ``reader_schema``. ``parse(blob)`` returns one row's values in
+    reader order; a row it raises on (corrupt input, NULL, an
+    unresolvable writer schema) decodes to all nulls, which the
+    DataFrame-level null check routes to the DLQ branch exactly like the
+    reference's catch-all (consumer.py:272-276)."""
+    import pyarrow as pa
+    from pyspark.sql.functions import arrow_udf
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
+
+    from ..schemas import avro_schema_to_struct
+
+    # nullable fields: an undecodable row is all-null
+    struct_type = StructType(
+        [StructField(f.name, f.dataType) for f in avro_schema_to_struct(reader_schema)]
+    )
+    arrow_fields = list(to_arrow_type(struct_type))
+    nulls = [None] * len(arrow_fields)
+
+    def _decode(col):
+        rows = []
+        for blob in _pylist(col):
+            try:
+                rows.append(parse(blob))
+            except Exception:
+                rows.append(nulls)
+        columns = list(zip(*rows)) or [()] * len(arrow_fields)
+        return pa.StructArray.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(columns, arrow_fields)],
+            fields=arrow_fields,
+        )
+
+    return arrow_udf(_decode, struct_type)
+
+
+def ocf_encode_udf(schema_json: str):
+    """Arrow UDF: struct column -> OCF container bytes per row. The
+    header and sync marker are the same for every row (same schema,
+    deterministic marker), so they are assembled once; the produced
+    bytes are identical to ``ocf_encode(schema, [row])``."""
+    header = _header_bytes(json.dumps(json.loads(schema_json)))
+    prefix = header + _varint_bytes(1)  # header + record count 1
+    sync = header[-16:]
+    return _encode_udf(
+        schema_json, lambda datum: prefix + _varint_bytes(len(datum)) + datum + sync
+    )
+
+
+def ocf_decode_udf(schema_json: str):
+    """Arrow UDF: OCF bytes -> struct column shaped by the reader schema
+    ``schema_json``, each container's writer schema resolved into it.
 
     Header cache: every container ``ocf_encode`` writes for one schema
     starts with the same header bytes (embedded schema, codec,
     deterministic sync marker), so the decoder keeps the last header it
-    parsed. A row whose bytes start with it skips straight to its data
-    block; any other row parses its own header, which replaces the
-    cached one. Containers from the reference's producer carry a random
-    sync marker each, so every one of them parses its header.
+    parsed with its resolution plan. A row whose bytes start with it
+    skips straight to its data block; any other row parses its own
+    header, which replaces the cached one. Containers from the
+    reference's producer carry a random sync marker each, so every one
+    of them parses its header."""
+    reader_schema = json.loads(schema_json)
+    names = [f["name"] for f in reader_schema["fields"]]
+    last = b""  # header bytes of the last parsed container
+    read = None
+    sync = b""
 
-    Float fields leave as Arrow arrays: a pandas float column would
-    turn a NaN price (a legal Avro float) into null on its way into
-    Spark, and the row would read as undecodable."""
-    import pandas as pd
-    import pyarrow as pa
-    from pyspark.sql.functions import pandas_udf
+    def parse(blob: bytes) -> list:
+        nonlocal last, read, sync
+        if not (last and blob.startswith(last)):
+            writer_schema, new_sync, header_end = _read_header(io.BytesIO(blob))
+            read = _resolution_plan(writer_schema, reader_schema)
+            sync, last = new_sync, blob[:header_end]
+        buf = io.BytesIO(blob)
+        buf.seek(len(last))
+        n_rec = read_long(buf)
+        block = io.BytesIO(read_bytes(buf))
+        if buf.read(16) != sync:
+            raise ValueError("sync marker mismatch")
+        if n_rec >= 1:
+            return read(block)
+        # empty first block: general multi-block parser
+        rec = ocf_decode(blob, reader_schema=reader_schema)
+        return [rec[n] for n in names]
 
-    fields = json.loads(schema_json)["fields"]
-    field_names = [f["name"] for f in fields]
-    arrow_floats = {
-        f["name"]: pa.float32() if f["type"] == "float" else pa.float64()
-        for f in fields
-        if f["type"] in ("float", "double")
-    }
-
-    def _decode(col):
-        columns: dict[str, list] = {n: [] for n in field_names}
-        last = b""  # header bytes of the last parsed container
-        readers: list = []
-        sync = b""
-        for blob in col:
-            try:
-                b = bytes(blob)
-                if not (last and b.startswith(last)):
-                    schema, new_sync, header_end = _read_header(io.BytesIO(b))
-                    readers = [
-                        (f["name"], _PRIMITIVE_READERS[f["type"]])
-                        for f in schema["fields"]
-                    ]
-                    sync, last = new_sync, b[:header_end]
-                buf = io.BytesIO(b)
-                buf.seek(len(last))
-                n_rec = read_long(buf)
-                block = io.BytesIO(read_bytes(buf))
-                if buf.read(16) != sync:
-                    raise ValueError("sync marker mismatch")
-                if n_rec >= 1:
-                    rec = {name: reader(block) for name, reader in readers}
-                else:  # empty first block: general multi-block parser
-                    rec = ocf_decode(b)
-                for n in field_names:
-                    columns[n].append(rec.get(n))
-            except Exception:
-                for n in field_names:  # all-null row -> DLQ branch downstream
-                    columns[n].append(None)
-        return pd.DataFrame(
-            {
-                n: pd.arrays.ArrowExtensionArray(pa.array(v, type=arrow_floats[n]))
-                if n in arrow_floats
-                else v
-                for n, v in columns.items()
-            }
-        )
-
-    return pandas_udf(_decode, spark_type)
+    return _decode_udf(reader_schema, parse)
 
 
 # ---------------------------------------------------------------------------
-# raw binary-datum codec (the spark-avro from_avro/to_avro twin)
+# raw binary-datum framing (the spark-avro from_avro/to_avro twin)
 # ---------------------------------------------------------------------------
 #
 # The reference ships OCF containers per message (producer.py:46-48 —
@@ -456,87 +463,44 @@ def ocf_decode_udf(schema_json: str, spark_type: str):
 # framing instead: a bare Avro binary datum, optionally prefixed with
 # the Confluent wire format (magic 0x00 + big-endian 4-byte schema id).
 # spark-avro's from_avro/to_avro handle the bare-datum case on the JVM;
-# that jar is absent in this container, so these Arrow-batched UDFs are
-# the engine's native path for both framings. ~6x smaller on the wire
-# than OCF for the reference's ~50 B record (BASELINE.md: 296-302 B
-# OCF vs ~20 B datum).
+# that jar is absent in this container, so these Arrow UDFs are the
+# engine's native path for both framings. ~6x smaller on the wire than
+# OCF for the reference's ~50 B record (BASELINE.md: 296-302 B OCF vs
+# ~20 B datum).
 
 _CONFLUENT_MAGIC = b"\x00"
 
 
+def _wire_prefix(confluent_schema_id: int | None) -> bytes:
+    if confluent_schema_id is None:
+        return b""
+    return _CONFLUENT_MAGIC + struct.pack(">I", confluent_schema_id)
+
+
 def avro_datum_encode_udf(schema_json: str, confluent_schema_id: int | None = None):
-    """pandas UDF: struct column -> raw Avro binary datum per row (no
+    """Arrow UDF: struct column -> raw Avro binary datum per row (no
     container; optional Confluent 5-byte wire prefix)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    schema_dict = json.loads(schema_json)
-    writers = [
-        (f["name"], _PRIMITIVE_WRITERS[f["type"]]) for f in schema_dict["fields"]
-    ]
-    names = [n for n, _ in writers]
-    prefix = (
-        _CONFLUENT_MAGIC + struct.pack(">I", confluent_schema_id)
-        if confluent_schema_id is not None
-        else b""
-    )
-
-    def _encode(rows):
-        cols = [rows[n] for n in names]
-        out = []
-        for vals in zip(*cols):
-            if _has_null(vals):
-                # unencodable record (null in a non-nullable Avro
-                # field) -> NULL datum, see ocf_encode_udf
-                out.append(None)
-                continue
-            body = io.BytesIO()
-            for (_, writer), v in zip(writers, vals):
-                writer(body, v)
-            out.append(prefix + body.getvalue())
-        return pd.Series(out, dtype=object)
-
-    return pandas_udf(_encode, "binary")
+    prefix = _wire_prefix(confluent_schema_id)
+    return _encode_udf(schema_json, lambda datum: prefix + datum)
 
 
-def avro_datum_decode_udf(
-    schema_json: str, spark_type: str, confluent_schema_id: int | None = None
-):
-    """pandas UDF: raw Avro binary datum -> struct column. With a
+def avro_datum_decode_udf(schema_json: str, confluent_schema_id: int | None = None):
+    """Arrow UDF: raw Avro binary datum -> struct column. With a
     ``confluent_schema_id``, rows must carry the matching 5-byte wire
     prefix; a wrong magic/id (or any decode error) yields an all-null
     row — the same DLQ routing contract as the OCF decoder."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
+    schema = json.loads(schema_json)
+    read = _resolution_plan(schema, schema)
+    prefix = _wire_prefix(confluent_schema_id)
 
-    schema_dict = json.loads(schema_json)
-    readers = [
-        (f["name"], _PRIMITIVE_READERS[f["type"]]) for f in schema_dict["fields"]
-    ]
-    field_names = [n for n, _ in readers]
-    prefix = (
-        _CONFLUENT_MAGIC + struct.pack(">I", confluent_schema_id)
-        if confluent_schema_id is not None
-        else b""
-    )
+    def parse(blob: bytes) -> list:
+        if not blob.startswith(prefix):
+            raise ValueError("bad confluent wire prefix")
+        buf = io.BytesIO(blob)
+        buf.seek(len(prefix))
+        values = read(buf)
+        if buf.read(1):
+            raise ValueError("trailing bytes after datum")
+        return values
 
-    def _decode(col):
-        columns: dict[str, list] = {n: [] for n in field_names}
-        for blob in col:
-            try:
-                b = bytes(blob)
-                if prefix:
-                    if not b.startswith(prefix):
-                        raise ValueError("bad confluent wire prefix")
-                    b = b[len(prefix):]
-                buf = io.BytesIO(b)
-                rec = {name: reader(buf) for name, reader in readers}
-                if buf.read(1):
-                    raise ValueError("trailing bytes after datum")
-            except Exception:
-                rec = {}
-            for n in field_names:
-                columns[n].append(rec.get(n))
-        return pd.DataFrame(columns)
-
-    return pandas_udf(_decode, spark_type)
+    return _decode_udf(schema, parse)

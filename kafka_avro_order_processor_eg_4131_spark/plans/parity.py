@@ -157,7 +157,7 @@ def codec_roundtrip_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import ORDER_AVRO_SCHEMA_JSON
 
     enc = ocf_encode_udf(ORDER_AVRO_SCHEMA_JSON)
-    dec = ocf_decode_udf(ORDER_AVRO_SCHEMA_JSON, "orderId string, product string, price float")
+    dec = ocf_decode_udf(ORDER_AVRO_SCHEMA_JSON)
     # widen the single-file input so the Python codec runs on all cores
     width = spark.sparkContext.defaultParallelism
     o = load(spark, sf_dir, "orders").repartition(width).select(
@@ -303,11 +303,7 @@ def avro_datum_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import ORDER_AVRO_SCHEMA_JSON
 
     enc = avro_datum_encode_udf(ORDER_AVRO_SCHEMA_JSON, confluent_schema_id=7)
-    dec = avro_datum_decode_udf(
-        ORDER_AVRO_SCHEMA_JSON,
-        "orderId string, product string, price float",
-        confluent_schema_id=7,
-    )
+    dec = avro_datum_decode_udf(ORDER_AVRO_SCHEMA_JSON, confluent_schema_id=7)
     width = spark.sparkContext.defaultParallelism
     o = load(spark, sf_dir, "orders").repartition(width).select(
         F.col("o_orderkey").cast("string").alias("orderId"),

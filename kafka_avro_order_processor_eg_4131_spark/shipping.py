@@ -17,23 +17,33 @@ import tempfile
 import zipfile
 
 _shipped_contexts: set[int] = set()
+_zip_path: str | None = None
 
 
 def _build_zip() -> str:
+    """Zip the package's ``.py`` files once per process. The zip is
+    always written fresh (temp name, then ``os.replace``): a file left at
+    the same path by an earlier process with a recycled pid, or by a
+    build killed halfway, would ship another checkout's code."""
+    global _zip_path
+    if _zip_path is not None:
+        return _zip_path
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
     zip_path = os.path.join(
         tempfile.gettempdir(), f"{pkg_name}-{os.getpid()}.zip"
     )
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fname in files:
-                    if not fname.endswith(".py"):
-                        continue
-                    full = os.path.join(root, fname)
-                    rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
-                    zf.write(full, rel)
+    tmp_path = zip_path + ".tmp"
+    with zipfile.ZipFile(tmp_path, "w") as zf:
+        for root, _dirs, files in os.walk(pkg_dir):
+            for fname in files:
+                if not fname.endswith(".py"):
+                    continue
+                full = os.path.join(root, fname)
+                rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
+                zf.write(full, rel)
+    os.replace(tmp_path, zip_path)
+    _zip_path = zip_path
     return zip_path
 
 

@@ -38,8 +38,6 @@ from ..schemas import (
 )
 from .retry import with_retry
 
-ORDER_DDL = "orderId string, product string, price float"
-
 
 class _ProgressTap:
     """StreamingQueryListener that accumulates every progress event as a
@@ -93,7 +91,7 @@ def decode_orders(envelope: DataFrame) -> DataFrame:
     """E2: OCF container bytes -> order struct. Corrupt payloads decode to
     an all-null struct and route to the permanent/DLQ branch, mirroring
     the reference's catch-all (consumer.py:272-276)."""
-    decode = ocf_decode_udf(ORDER_AVRO_SCHEMA_JSON, ORDER_DDL)
+    decode = ocf_decode_udf(ORDER_AVRO_SCHEMA_JSON)
     return envelope.withColumn("order", decode(F.col("value")))
 
 

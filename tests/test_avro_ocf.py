@@ -7,6 +7,7 @@ from __future__ import annotations
 import math
 import struct
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -186,9 +187,7 @@ def test_decode_udf_mixed_schema_batch_falls_back(spark):
                 }]))
             )
     df = spark.createDataFrame(blobs, "i int, value binary").repartition(1)
-    dec = ocf_decode_udf(
-        ORDER_AVRO_SCHEMA_JSON, "orderId string, product string, price float"
-    )
+    dec = ocf_decode_udf(ORDER_AVRO_SCHEMA_JSON)
     rows = {
         r["i"]: r
         for r in df.select(
@@ -209,6 +208,7 @@ def test_decode_udf_empty_first_block_falls_back(spark):
     """A container whose first data block holds zero records must still
     decode (general multi-block parser) instead of nulling out."""
     import io
+    import json
 
     from pyspark.sql import functions as F
 
@@ -220,12 +220,12 @@ def test_decode_udf_empty_first_block_falls_back(spark):
 
     ship_package(spark)
     # build a container with an EMPTY first block then a 1-record block
-    normal = ocf_encode(ORDER_AVRO_SCHEMA, [{"orderId": "x", "product": "p", "price": 2.5}])
-    prefix, sync, writers = A._encode_ctx(ORDER_AVRO_SCHEMA_JSON)
-    header = prefix[: -len(A._varint_bytes(1))]
+    rec = {"orderId": "x", "product": "p", "price": 2.5}
+    normal = ocf_encode(ORDER_AVRO_SCHEMA, [rec])
+    header = A._header_bytes(json.dumps(ORDER_AVRO_SCHEMA))
+    sync = header[-16:]
     body = io.BytesIO()
-    for (_, w), v in zip(writers, ["x", "p", 2.5]):
-        w(body, v)
+    A.write_datum(body, ORDER_AVRO_SCHEMA, rec)
     payload = body.getvalue()
     weird = (
         header
@@ -233,9 +233,7 @@ def test_decode_udf_empty_first_block_falls_back(spark):
         + A._varint_bytes(1) + A._varint_bytes(len(payload)) + payload + sync
     )
     df = spark.createDataFrame([(normal,), (weird,)], "value binary").repartition(1)
-    dec = A.ocf_decode_udf(
-        ORDER_AVRO_SCHEMA_JSON, "orderId string, product string, price float"
-    )
+    dec = A.ocf_decode_udf(ORDER_AVRO_SCHEMA_JSON)
     got = sorted(
         df.select(dec(F.col("value")).alias("o")).select("o.orderId").collect()
     )
@@ -300,7 +298,7 @@ def test_decode_udf_parses_header_once_per_run(monkeypatch):
     runs from two writer schemas parses one header per run, not one per
     row; every row still decodes, and a NaN price stays NaN rather than
     becoming null."""
-    import pandas as pd
+    import pyarrow as pa
     import pyspark.sql.functions as PF
 
     from kafka_avro_order_processor_eg_4131_spark.functions import avro_ocf as A
@@ -317,7 +315,7 @@ def test_decode_udf_parses_header_once_per_run(monkeypatch):
 
     monkeypatch.setattr(A, "_read_header", counting_read_header)
     # the decoder's Python function itself, without a Spark session
-    monkeypatch.setattr(PF, "pandas_udf", lambda f, returnType: f)
+    monkeypatch.setattr(PF, "arrow_udf", lambda f, returnType: f)
     evolved = {
         "type": "record",
         "name": "Order",
@@ -333,11 +331,94 @@ def test_decode_udf_parses_header_once_per_run(monkeypatch):
     blobs.append(
         ocf_encode(ORDER_AVRO_SCHEMA, [{"orderId": "n", "product": "P", "price": math.nan}])
     )
-    decode = A.ocf_decode_udf(
-        ORDER_AVRO_SCHEMA_JSON, "orderId string, product string, price float"
-    )
-    out = decode(pd.Series(blobs))
+    decode = A.ocf_decode_udf(ORDER_AVRO_SCHEMA_JSON)
+    out = decode(pa.array(blobs, type=pa.binary()))
     assert len(calls) == 3
-    assert out["orderId"].tolist() == [f"o{i}" for i in range(30)] + ["n"]
-    assert out["price"].tolist()[:30] == [float(i) for i in range(30)]
-    assert math.isnan(out["price"].iloc[30])
+    assert out.field("orderId").to_pylist() == [f"o{i}" for i in range(30)] + ["n"]
+    prices = out.field("price").to_pylist()
+    assert prices[:30] == [float(i) for i in range(30)]
+    assert math.isnan(prices[30])
+
+
+def test_decode_udf_resolves_writer_schema(monkeypatch):
+    """The OCF decode UDF resolves each container's writer schema into
+    its reader schema, row for row the same as ``ocf_decode(...,
+    reader_schema=...)``: a reader field the writer lacks takes its
+    default, or, without one, nulls the whole row; an int writer field
+    read as float is promoted."""
+    import json
+
+    import pyarrow as pa
+    import pyspark.sql.functions as PF
+
+    from kafka_avro_order_processor_eg_4131_spark.functions import avro_ocf as A
+
+    monkeypatch.setattr(PF, "arrow_udf", lambda f, returnType: f)
+
+    def record_schema(*fields):
+        return {"type": "record", "name": "Order", "fields": list(fields)}
+
+    order_id = {"name": "orderId", "type": "string"}
+    product = {"name": "product", "type": "string"}
+    price = {"name": "price", "type": "float"}
+    no_product = ocf_encode(
+        record_schema(order_id, price), [{"orderId": "a", "price": 20.0}]
+    )
+    int_price = ocf_encode(
+        record_schema(order_id, product, {"name": "price", "type": "int"}),
+        [{"orderId": "b", "product": "p", "price": 20}],
+    )
+    plain = ocf_encode(
+        ORDER_AVRO_SCHEMA, [{"orderId": "c", "product": "q", "price": 7.5}]
+    )
+    with_currency = record_schema(
+        order_id, product, price, {"name": "currency", "type": "string", "default": "USD"}
+    )
+    cases = [
+        (ORDER_AVRO_SCHEMA, no_product, None),  # missing, no default
+        (with_currency, plain, {"orderId": "c", "product": "q", "price": 7.5, "currency": "USD"}),
+        (ORDER_AVRO_SCHEMA, int_price, {"orderId": "b", "product": "p", "price": 20.0}),
+    ]
+    for reader, blob, want in cases:
+        decode = A.ocf_decode_udf(json.dumps(reader))
+        [got] = decode(pa.array([blob], type=pa.binary())).to_pylist()
+        if want is None:
+            with pytest.raises(ValueError, match="missing and has no default"):
+                ocf_decode(blob, reader_schema=reader)
+            assert got == {f["name"]: None for f in reader["fields"]}
+        else:
+            assert ocf_decode(blob, reader_schema=reader) == want
+            assert got == want
+
+
+def test_datum_decode_udf_keeps_nan_price(spark):
+    """A raw datum whose price is NaN (legal Avro) decodes to a NaN
+    price in Spark, not to null."""
+    import io
+
+    from pyspark.sql import functions as F
+
+    from kafka_avro_order_processor_eg_4131_spark.functions.avro_ocf import (
+        avro_datum_decode_udf,
+        write_datum,
+    )
+    from kafka_avro_order_processor_eg_4131_spark.schemas import (
+        ORDER_AVRO_SCHEMA_JSON,
+    )
+    from kafka_avro_order_processor_eg_4131_spark.shipping import ship_package
+
+    ship_package(spark)
+    body = io.BytesIO()
+    write_datum(body, ORDER_AVRO_SCHEMA, {"orderId": "n", "product": "P", "price": math.nan})
+    dec = avro_datum_decode_udf(ORDER_AVRO_SCHEMA_JSON)
+    r = (
+        spark.createDataFrame([(body.getvalue(),)], "value binary")
+        .select(dec(F.col("value")).alias("o"))
+        .select(
+            "o.orderId",
+            F.col("o.price").isNull().alias("is_null"),
+            F.isnan("o.price").alias("is_nan"),
+        )
+        .first()
+    )
+    assert (r["orderId"], r["is_null"], r["is_nan"]) == ("n", False, True)

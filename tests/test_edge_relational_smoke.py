@@ -906,10 +906,10 @@ def _canon(df):
     )
 
 
-def _parity_sweep(spark, fixture_dir: str) -> list[str]:
-    """Run every catalog entry against ``fixture_dir`` and hash-compare
-    with its DuckDB oracle; returns the list of problems (empty =
-    223/223 parity)."""
+def _parity_sweep(spark, fixture_dir: str, names=None) -> list[str]:
+    """Run every catalog entry (or just ``names``) against
+    ``fixture_dir`` and hash-compare with its DuckDB oracle; returns the
+    list of problems (empty = 223/223 parity)."""
     import duckdb
 
     from kafka_avro_order_processor_eg_4131_spark.catalog import REGISTRY
@@ -924,7 +924,7 @@ def _parity_sweep(spark, fixture_dir: str) -> list[str]:
             f"read_parquet('{fixture_dir}/{t}.parquet/*.parquet')"
         )
     problems: list[str] = []
-    for name in sorted(REGISTRY):
+    for name in sorted(names or REGISTRY):
         q = REGISTRY[name]
         try:
             sdf = q.fn(spark, fixture_dir).toPandas()
@@ -949,6 +949,18 @@ def _parity_sweep(spark, fixture_dir: str) -> list[str]:
     con.close()
     C.release_families(spark)
     return problems
+
+
+@pytest.mark.parametrize("edges", ["base", "float_edges", "magnitude_edges"])
+def test_codec_queries_match_oracles_on_edge_fixtures(spark, tmp_path, edges):
+    """The two codec catalog queries (OCF and raw-datum round trips)
+    match their DuckDB oracles on the edge fixtures: NaN, ±Inf, -0.0
+    and out-of-domain prices go through both encoders, both decoders
+    and the router."""
+    build_edge_rel_fixture(tmp_path, **({} if edges == "base" else {edges: True}))
+    assert not _parity_sweep(
+        spark, str(tmp_path), names=("codec_roundtrip_routing", "avro_datum_roundtrip")
+    )
 
 
 @pytest.mark.slow

@@ -756,12 +756,9 @@ def test_avro_datum_roundtrip_and_wire_size(spark, sf_small):
     from kafka_avro_order_processor_eg_4131_spark.sources.tables import load_table
 
     ship_package(spark)
-    ddl = "orderId string, product string, price float"
     enc = avro_datum_encode_udf(ORDER_AVRO_SCHEMA_JSON, confluent_schema_id=7)
-    dec = avro_datum_decode_udf(ORDER_AVRO_SCHEMA_JSON, ddl, confluent_schema_id=7)
-    dec_wrong = avro_datum_decode_udf(
-        ORDER_AVRO_SCHEMA_JSON, ddl, confluent_schema_id=8
-    )
+    dec = avro_datum_decode_udf(ORDER_AVRO_SCHEMA_JSON, confluent_schema_id=7)
+    dec_wrong = avro_datum_decode_udf(ORDER_AVRO_SCHEMA_JSON, confluent_schema_id=8)
     ocf = ocf_encode_udf(ORDER_AVRO_SCHEMA_JSON)
 
     src = (

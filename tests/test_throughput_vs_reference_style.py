@@ -32,7 +32,6 @@ from kafka_avro_order_processor_eg_4131_spark.functions.avro_ocf import ocf_deco
 from kafka_avro_order_processor_eg_4131_spark.schemas import ORDER_AVRO_SCHEMA_JSON
 
 N = 250_000
-ORDER_DDL = "orderId string, product string, price float"
 
 
 def reference_style_loop(blobs) -> dict:
@@ -74,7 +73,7 @@ def test_spark_pipeline_beats_reference_style_loop(spark):
     from kafka_avro_order_processor_eg_4131_spark.sources.generator import synthetic_orders
 
     enc = ocf_encode_udf(ORDER_AVRO_SCHEMA_JSON)
-    dec = ocf_decode_udf(ORDER_AVRO_SCHEMA_JSON, ORDER_DDL)
+    dec = ocf_decode_udf(ORDER_AVRO_SCHEMA_JSON)
 
     # blobs generated inside Spark, cached — also warms the Python workers
     blobs_df = (
