@@ -12,6 +12,8 @@ the zip ships with the job to all 1000 executors.
 
 from __future__ import annotations
 
+import atexit
+import contextlib
 import os
 import tempfile
 import zipfile
@@ -24,7 +26,8 @@ def _build_zip() -> str:
     """Zip the package's ``.py`` files once per process. The zip is
     always written fresh (temp name, then ``os.replace``): a file left at
     the same path by an earlier process with a recycled pid, or by a
-    build killed halfway, would ship another checkout's code."""
+    build killed halfway, would ship another checkout's code. It is
+    removed when the interpreter exits."""
     global _zip_path
     if _zip_path is not None:
         return _zip_path
@@ -43,8 +46,14 @@ def _build_zip() -> str:
                 rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                 zf.write(full, rel)
     os.replace(tmp_path, zip_path)
+    atexit.register(_remove, zip_path)
     _zip_path = zip_path
     return zip_path
+
+
+def _remove(path: str) -> None:
+    with contextlib.suppress(OSError):
+        os.remove(path)
 
 
 def ship_package(spark) -> None:

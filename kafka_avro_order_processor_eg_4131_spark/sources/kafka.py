@@ -58,7 +58,13 @@ def write_kafka_batch(
     bootstrap: str = DEFAULT_BOOTSTRAP,
 ) -> None:
     """Batch Kafka sink (used inside foreachBatch): expects ``key`` and
-    ``value`` binary columns, optionally ``headers``."""
+    ``value`` binary columns, optionally ``headers``.
+
+    Unlike the file sinks, a topic cannot replace a replayed batch's
+    records: Spark's Kafka sink is at-least-once, so a replay appends
+    again. Exactly-once on topics needs a transactional producer whose
+    transaction is keyed on (query id, batch_id), or readers that dedupe
+    on topic/partition/offset."""
     (
         df.write.format("kafka")
         .option("kafka.bootstrap.servers", bootstrap)

@@ -9,11 +9,13 @@
                         success/DLQ; surfaced for redelivery)
 
 Delivery semantics: each micro-batch either fully commits (checkpoint
-advances after all four sinks succeed) or is replayed — at-least-once
-per batch. This is deliberately stronger than the reference, whose
-per-record manual commit can silently skip past uncommitted transient
-offsets (the F2 lost-retry bug, SURVEY.md §2.6 — documented, not
-reproduced).
+advances after all four sinks are published) or is replayed, and a
+replay of ``batch_id`` replaces that batch's sink files instead of
+appending to them — replay-idempotent per ``batch_id``, so a replayable
+source gives each message exactly once in the sinks. This is
+deliberately stronger than the reference, whose per-record manual
+commit can silently skip past uncommitted transient offsets (the F2
+lost-retry bug, SURVEY.md §2.6 — documented, not reproduced).
 
 Broker-free twin: the same pipeline runs from a file (parquet) envelope
 source so tests and CI need no Kafka; the logic downstream of the
@@ -25,7 +27,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.avro_ocf import ocf_decode_udf
@@ -100,24 +102,20 @@ def route_orders(decoded: DataFrame) -> DataFrame:
     return decoded.withColumn("status", status_expr(F.col("order.price")))
 
 
-def dlq_enrich(batch: DataFrame, error_reason_col) -> DataFrame:
-    """P6: build the DLQ record — ORIGINAL raw bytes + key (consumer.py:
-    99-105) and the 5 reference headers (consumer.py:90-96) in Spark's
-    Kafka-sink headers shape."""
+def dlq_headers(reason) -> Column:
+    """P6/K2: the 5 reference DLQ headers (consumer.py:90-96) in Spark's
+    Kafka-sink headers shape. The DLQ record keeps its ORIGINAL raw
+    bytes and key (consumer.py:99-105)."""
 
     def hdr(k: str, v):
         return F.struct(F.lit(k).alias("key"), v.cast("binary").alias("value"))
 
-    return batch.select(
-        F.col("value"),  # original serialized bytes, unmodified
-        F.col("key"),
-        F.array(
-            hdr("error_reason", error_reason_col),
-            hdr("original_topic", F.col("topic")),
-            hdr("original_partition", F.col("partition").cast("string")),
-            hdr("original_offset", F.col("offset").cast("string")),
-            hdr("timestamp", F.unix_timestamp().cast("string")),
-        ).alias("headers"),
+    return F.array(
+        hdr("error_reason", reason),
+        hdr("original_topic", F.col("topic")),
+        hdr("original_partition", F.col("partition").cast("string")),
+        hdr("original_offset", F.col("offset").cast("string")),
+        hdr("timestamp", F.unix_timestamp().cast("string")),
     )
 
 
@@ -130,15 +128,14 @@ def dlq_enrich(batch: DataFrame, error_reason_col) -> DataFrame:
 class PipelineSinks:
     """File-based sinks for the broker-free twin. With Kafka available,
     success/dlq/retry would be topics via sources.kafka.write_kafka_batch
-    — same batch DataFrames, different format.
+    — the same routed rows, a different format.
 
-    Every sink is append-only and delivery is at-least-once: a
-    micro-batch replayed N times (a failed write, a restart before the
-    checkpoint commit) appends N copies to every sink that wrote in
-    those attempts, healthy ones included, since the four writes run
-    concurrently and a failing one does not stop the others. Readers of
-    ``agg_dir`` must dedupe on ``batch_id`` before summing; the
-    success/DLQ/retry rows carry topic/partition/offset to dedupe on."""
+    Micro-batch ``batch_id`` owns the files named ``b<batch_id>-*`` in
+    every sink, and a replay of it replaces them. success/dlq/retry
+    files hold key, value, topic, partition, offset and headers: the 5
+    DLQ headers in dlq, null in success and retry. agg files hold one
+    ``batch_id int, order_count bigint, total_price double`` row per
+    batch. A route with no rows in a batch gets no file."""
 
     success_dir: str
     dlq_dir: str
@@ -146,79 +143,70 @@ class PipelineSinks:
     agg_dir: str
 
 
+def _publish(spark: SparkSession, staging: str, batch_id: int, sinks: PipelineSinks) -> None:
+    """Move the staged files of ``batch_id`` into the sinks through the
+    session's Hadoop FileSystem: delete each sink's ``b<batch_id>-*``
+    files (an earlier attempt's), rename each staged ``*.parquet`` into
+    its sink as ``b<batch_id>-<name>``, then remove the staging dir."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(staging).getFileSystem(spark._jsc.hadoopConfiguration())
+    for sub, sink_dir in (
+        (f"status={STATUS_SUCCESS}", sinks.success_dir),
+        (f"status={STATUS_PERMANENT}", sinks.dlq_dir),
+        (f"status={STATUS_TRANSIENT}", sinks.retry_dir),
+        ("agg", sinks.agg_dir),
+    ):
+        sink = Path(sink_dir)
+        for old in fs.globStatus(Path(sink, f"b{batch_id}-*")) or []:
+            fs.delete(old.getPath(), False)
+        for new in fs.globStatus(Path(f"{staging}/{sub}/*.parquet")) or []:
+            src = new.getPath()
+            dst = Path(sink, f"b{batch_id}-{src.getName()}")
+            if not (fs.mkdirs(sink) and fs.rename(src, dst)):
+                raise OSError(f"cannot publish {src} into {sink}")
+    fs.delete(Path(staging), True)
+
+
 def process_batch(batch: DataFrame, batch_id: int, sinks: PipelineSinks) -> None:
-    """One micro-batch through the 3-way router. The batch is persisted
-    once so the four writes (success, DLQ, retry, agg) don't recompute
-    the decode UDF.
+    """One micro-batch through the 3-way router in two Spark jobs: one
+    write of the routed rows, partitioned by status, into a hidden
+    ``_staging/<batch_id>`` dir beside the success sink, and the agg row
+    from an Observation on that write (A1-A3: count/sum over successes).
+    ``_publish`` then moves the staged files into the sinks, replacing
+    whatever an earlier attempt of the same batch left, so a replayed
+    batch (a retried write, a restart before the checkpoint commit)
+    leaves one copy. The checkpoint advances only after this returns."""
+    spark = batch.sparkSession
+    price = F.col("order.price")
+    success = F.col("status") == STATUS_SUCCESS
+    reason = F.when(price.isNotNull(), dlq_error_reason_expr(price)).otherwise(
+        F.lit("Processing error: deserialization failed")
+    )
+    staging = os.path.join(
+        os.path.dirname(sinks.success_dir.rstrip("/")), "_staging", str(batch_id)
+    )
 
-    Round 13 (optimization guide §2.6 — overlap independent jobs): the
-    four sink writes are independent jobs over the SAME persisted batch,
-    so they are submitted from concurrent driver threads instead of
-    sequentially — each write's straggler tail back-fills the others'
-    tasks, cutting per-batch wall clock without touching what is
-    written. Delivery semantics are unchanged: the checkpoint advances
-    only after process_batch RETURNS, and warm_concurrently joins every
-    thread and re-raises on any failure, so a batch still either fully
-    commits (all four sinks succeeded) or is replayed — the
-    at-least-once contract is that all-or-replay property; the sinks
-    are separate directories with no cross-sink ordering guarantee to
-    preserve. Each write keeps its own bounded with_retry (F3), inside
-    its thread. Concurrent first-touch of the lazy persist is safe:
-    BlockManager's per-block locks make racing tasks compute-or-wait,
-    never double-cache."""
-    from ..operators.cache import warm_concurrently
-
-    batch.persist()
-    try:
-        success = batch.filter(F.col("status") == STATUS_SUCCESS)
-        permanent = batch.filter(F.col("status") == STATUS_PERMANENT)
-        transient = batch.filter(F.col("status") == STATUS_TRANSIENT)
-
-        # A1-A3: per-batch aggregate contribution (count/sum over successes);
-        # the running totals are the sum over batch outputs — same values the
-        # reference prints at each message, observed at batch boundaries.
-        agg = success.groupBy().agg(
+    def write_and_publish() -> None:
+        obs = Observation()
+        batch.observe(
+            obs,
+            F.count(F.when(success, 1)).alias("order_count"),
+            F.sum(F.when(success, price.cast("double"))).alias("total_price"),
+        ).select(
+            "key", "value", "topic", "partition", "offset",
+            F.when(F.col("status") == STATUS_PERMANENT, dlq_headers(reason)).alias("headers"),
+            "status",
+        ).write.partitionBy("status").mode("overwrite").parquet(staging)
+        m = obs.get
+        # literals on a one-row range: the agg row never visits a Python worker
+        spark.range(0, 1, 1, 1).select(
             F.lit(batch_id).alias("batch_id"),
-            F.count("*").alias("order_count"),
-            F.sum(F.col("order.price").cast("double")).alias("total_price"),
-        )
+            F.lit(m["order_count"]).cast("bigint").alias("order_count"),
+            F.lit(m["total_price"]).cast("double").alias("total_price"),
+        ).write.mode("overwrite").parquet(f"{staging}/agg")
+        _publish(spark, staging, batch_id, sinks)
 
-        warm_concurrently(
-            [
-                lambda: with_retry(
-                    lambda: success.select(
-                        "key", "value", "topic", "partition", "offset"
-                    )
-                    .write.mode("append")
-                    .parquet(sinks.success_dir)
-                ),
-                lambda: with_retry(
-                    lambda: dlq_enrich(
-                        permanent,
-                        F.when(
-                            F.col("order.price").isNotNull(),
-                            dlq_error_reason_expr(F.col("order.price")),
-                        ).otherwise(
-                            F.lit("Processing error: deserialization failed")
-                        ),
-                    )
-                    .write.mode("append")
-                    .parquet(sinks.dlq_dir)
-                ),
-                lambda: with_retry(
-                    lambda: transient.select(
-                        "key", "value", "topic", "partition", "offset"
-                    )
-                    .write.mode("append")
-                    .parquet(sinks.retry_dir)
-                ),
-                lambda: with_retry(
-                    lambda: agg.write.mode("append").parquet(sinks.agg_dir)
-                ),
-            ]
-        )
-    finally:
-        batch.unpersist()
+    with_retry(write_and_publish)
 
 
 OBSERVE_NAME = "route_metrics"

@@ -163,6 +163,52 @@ def test_ocf_decode_udf_matches_ocf_decode(reader):
     _assert_decoded(out, expected, reader)
 
 
+# Evolved writers resolved by hand, from the Avro spec's rules rather
+# than from the codec: (writer schema, record written, reader -> record
+# read, None for a reader field with no writer value and no default).
+_W_EXTRA = _record_schema(_ID, _PRODUCT, _PRICE, ("warehouse", "string"))
+_W_INT = _record_schema(_ID, _PRODUCT, ("price", "int"))
+_W_LONG = _record_schema(_ID, _PRODUCT, ("price", "long"))
+_W_NO_PRODUCT = _record_schema(_ID, _PRICE)
+_R_BASE, _R_CURRENCY, _R_DOUBLE, _R_BYTES = READERS
+RESOLVED = [
+    (_W_EXTRA, {"orderId": "ördér-ñ", "product": "咖啡杯", "price": -0.0, "warehouse": "W"}, [
+        (_R_BASE, {"orderId": "ördér-ñ", "product": "咖啡杯", "price": -0.0}),
+        (_R_CURRENCY, {"orderId": "ördér-ñ", "product": "咖啡杯", "price": -0.0,
+                       "currency": "USD"}),
+        (_R_DOUBLE, {"orderId": "ördér-ñ", "price": -0.0}),
+        (_R_BYTES, {"orderId": "ördér-ñ", "product": "咖啡杯".encode()}),
+    ]),
+    (_W_INT, {"orderId": "i", "product": "p", "price": 16777217}, [
+        (_R_BASE, {"orderId": "i", "product": "p", "price": 16777216.0}),  # float32 rounds
+        (_R_CURRENCY, {"orderId": "i", "product": "p", "price": 16777216.0,
+                       "currency": "USD"}),
+        (_R_DOUBLE, {"orderId": "i", "price": 16777217.0}),
+    ]),
+    (_W_LONG, {"orderId": "l", "product": "p", "price": -(2**63)}, [
+        (_R_BASE, {"orderId": "l", "product": "p", "price": -9.223372036854775808e18}),
+        (_R_DOUBLE, {"orderId": "l", "price": -9.223372036854775808e18}),
+    ]),
+    (_W_NO_PRODUCT, {"orderId": "a", "price": 20.0}, [
+        (_R_BASE, None),
+        (_R_CURRENCY, None),
+        (_R_DOUBLE, {"orderId": "a", "price": 20.0}),
+        (_R_BYTES, None),
+    ]),
+]
+
+
+@pytest.mark.parametrize("writer,record,reads", RESOLVED,
+                         ids=["extra-field", "int-price", "long-price", "no-product"])
+def test_ocf_decode_udf_resolves_evolved_writers_to_fixed_records(writer, record, reads):
+    """An oracle independent of the codec's resolution plan: each
+    evolved writer's container decodes to the hand-resolved record."""
+    blob = ocf_encode(writer, [record])
+    for reader, want in reads:
+        out = A.ocf_decode_udf(json.dumps(reader))(pa.array([blob], type=pa.binary()))
+        _assert_decoded(out, [want], reader)
+
+
 def test_encoders_match_pure_python_codec_and_round_trip():
     """Both encoders give ``ocf_encode``'s bytes (and the datum inside
     them) for every encodable row, NULL for a null field or a NaN

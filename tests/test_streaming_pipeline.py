@@ -223,3 +223,42 @@ def test_dlq_reason_for_non_finite_prices(spark, tmp_path):
         .collect()
     )
     assert sorted(r["r"].encode() for r in catalog_text) == sorted(reasons.values())
+
+
+def test_replayed_batch_after_restart_replaces_its_output(spark, tmp_path):
+    """A restart after a batch's sinks were written but before its
+    checkpoint commit replays that batch with the same batch_id. Every
+    sink keeps its rows, bytes and DLQ headers (the wall-clock timestamp
+    aside), and agg keeps one row per batch_id."""
+    from kafka_avro_order_processor_eg_4131_spark.streaming.pipeline import (
+        run_order_pipeline,
+    )
+    from tests.test_round13_ops import _sink_rows
+
+    input_dir = str(tmp_path / "input")
+    for part, chunk in enumerate((FROZEN_ORDERS[:5], FROZEN_ORDERS[5:])):
+        rows = [
+            (
+                oid.encode(),
+                ocf_encode(ORDER_AVRO_SCHEMA, [{"orderId": oid, "product": pr, "price": p}]),
+                "orders",
+                part,
+                i,
+            )
+            for i, (oid, pr, p) in enumerate(chunk)
+        ]
+        spark.createDataFrame(
+            rows, "key binary, value binary, topic string, partition int, offset long"
+        ).coalesce(1).write.mode("append").parquet(input_dir)
+    work = tmp_path / "work"
+
+    def run_and_read():
+        sinks = run_order_pipeline(spark, input_dir, str(work), max_files_per_trigger=1)
+        return _sink_rows(spark, sinks)
+
+    first = run_and_read()
+    assert [b for b, *_ in first["agg"]] == [0, 1]
+    commits = work / "checkpoint" / "commits"
+    (commits / "1").unlink()
+    (commits / ".1.crc").unlink()
+    assert run_and_read() == first
